@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs registered queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query is fully materialized through the
@@ -30,6 +30,10 @@ import org.apache.spark.sql.SparkSession
   * evidence of contention. The machine's 1-min loadavg is sampled before
   * the run into `contended` AND after it into `load_end` — mid-run
   * contention is visible even when the host was quiet at launch. Args select a subset by name.
+  *
+  * Scale probe: `Bench q1 q2 …` once per scale dir (SPARK_GRAFT_SF_DIR
+  * set to each) gives per-query warm medians under the one bench session
+  * (`core.Session`, SPARK_GRAFT_CPUS cores, default all).
   */
 object Bench {
 
@@ -78,47 +82,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val heavySec = sys.env.getOrElse("SPARK_GRAFT_HEAVY_SEC", "20").toDouble
-    // r17: long-session hygiene is ON by default (core/SessionHygiene —
-    // caps the app-status stores whose unbounded growth taxed the tail
-    // of a ~200-query sweep); SPARK_GRAFT_HYGIENE=off restores Spark
-    // defaults for A/B-ing the session-aging effect itself.
-    val hygiene = sys.env.getOrElse("SPARK_GRAFT_HYGIENE", "on") != "off"
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val b1 = graft.core.EngineTuning(b0)
-    val spark = (if (hygiene) graft.core.SessionHygiene(b1) else b1)
-      .getOrCreate()
+    val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("WARN")
-    // r17 position experiment: SPARK_GRAFT_FIRST / SPARK_GRAFT_LAST
-    // (comma lists) move the named queries to the head / tail of the
-    // sweep — the instrument for separating "this query got slower"
-    // from "queries run LATE in a long session get slower". A record
-    // run leaves both unset (order=default).
-    val movedFirst = sys.env.getOrElse("SPARK_GRAFT_FIRST", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    // a query named in BOTH lists would run twice (double-counted in
-    // total, duplicate JSON key): FIRST wins, LAST drops the overlap
-    val movedLast = sys.env.getOrElse("SPARK_GRAFT_LAST", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .filterNot(movedFirst.contains)
-    val baseNames =
+    val names =
       if (args.nonEmpty) args.toSeq.filter(SparkEntry.queries.contains)
       else headline.filter(SparkEntry.queries.contains) ++
         SparkEntry.queries.keys.filterNot(headline.contains).toSeq.sorted
-    val names =
-      movedFirst.filter(baseNames.contains) ++
-        baseNames.filterNot(n =>
-          movedFirst.contains(n) || movedLast.contains(n)) ++
-        movedLast.filter(baseNames.contains)
-    val order =
-      if (movedFirst.isEmpty && movedLast.isEmpty) "default"
-      else s"first:${movedFirst.mkString("+")};last:${movedLast.mkString("+")}"
     // untimed warmup: absorb JVM/JIT/codegen startup so the first timed
     // query measures steady-state execution, not session bring-up.
     // r16 (anchors3): the PRE anchor block runs closest to JVM start,
@@ -133,7 +104,7 @@ object Bench {
       try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     val errors = scala.collection.mutable.ListBuffer[String]()
     def once(name: String): Double = {
@@ -143,7 +114,7 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           errors += s"$name: ${e.getClass.getSimpleName}"
           -1.0
       }
@@ -153,7 +124,7 @@ object Bench {
     def loadavg(): String = try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.getLines().next().split(" ")(0) finally src.close()
-    } catch { case _: Throwable => "-1" }
+    } catch { case NonFatal(_) => "-1" }
     val loadStart = loadavg()
     // r15 protocol: anchors are measured BEFORE the sweep as well as
     // after. The r15 record showed why one block is not enough: its
@@ -289,7 +260,10 @@ object Bench {
         .mkString("{", ",", "}")
     val ancH = ancJson(anchorsHeavyPost)
     val ancHPre = ancJson(anchorsHeavyPre)
-    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"reps":$reps,"reps_dev":$rp,"flagged":$fl,"anchors_pre":$ancPre,"anchors_heavy_pre":$ancHPre,"anchors_mid":$ancMid,"anchors":$anc,"anchors_heavy":$ancH,"protocol":"warmup-minmedian-anchors4-r17","order":"$order","hygiene":${hygiene},"errors":$errs,"contended":$loadStart,"load_end":$loadEnd,"sf":"$sfDir"}"""
+    // `order` and `hygiene` are constants since the r17 position and
+    // session-aging experiments settled; they stay so older records
+    // still compare key for key
+    val line = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"reps":$reps,"reps_dev":$rp,"flagged":$fl,"anchors_pre":$ancPre,"anchors_heavy_pre":$ancHPre,"anchors_mid":$ancMid,"anchors":$anc,"anchors_heavy":$ancH,"protocol":"warmup-minmedian-anchors4-r17","order":"default","hygiene":true,"errors":$errs,"contended":$loadStart,"load_end":$loadEnd,"sf":"$sfDir"}"""
     println(line)
     // sidecar copy (VERDICT r18 item 2): the driver captures only a TAIL
     // of stdout, and r17's one-line JSON was front-truncated in that
@@ -299,7 +273,7 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_last.json"),
       (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

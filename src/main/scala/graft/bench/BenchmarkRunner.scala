@@ -1,16 +1,18 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.NabIo
+import graft.metrics.Metrics
 
 /** E1: the runnable final benchmark (run_final_benchmark.py) — executes
   * every model pipeline over the events series table, persists the
-  * results tree (`<out>/<model>/events/{predictions,metrics}`), and
-  * writes the leaderboard CSV (aggregate_metrics.py).
+  * results tree (`<out>/<model>/events/{predictions,metrics}`), then
+  * builds the leaderboard CSV `<out>/metrics_summary` from the tree it
+  * just wrote (aggregate_metrics.py), so each pipeline runs once.
   *
   * Usage: runMain graft.bench.BenchmarkRunner <sfDir> <outDir> [models]
+  * Env: SPARK_GRAFT_CPUS (default all cores).
   */
 object BenchmarkRunner {
 
@@ -19,13 +21,7 @@ object BenchmarkRunner {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_results"
     val models = if (args.length > 2) args(2).split(",").toSeq
                  else Seq("stl", "kalman")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("WARN")
     // dual-generation events read (ns-as-long or native µs) — shared
     // with the query surface
@@ -61,8 +57,12 @@ object BenchmarkRunner {
       Pipelines.persist(s"$outDir/$m/events", pred, metrics)
       println(s"[benchmark] $m done")
     }
-    val lb = Pipelines.runFinalBenchmark(series, labels, "user_id", "ts",
-      "value", cfg, models)
+    val lb = Metrics.leaderboard(Seq(NabIo.readMetricsTree(spark, outDir)
+      .filter(col("Model").isin(models.map(_.toUpperCase): _*))
+      .select(col("Model"), col("user_id").cast("string").as("Dataset"),
+        col("f1").as("Event_F1"), col("precision").as("Precision"),
+        col("recall").as("Recall"), col("fp_per_day").as("FP_per_Day"),
+        col("median_latency_minutes").as("Latency_Min"))))
     lb.coalesce(1).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/metrics_summary")
     lb.show(20, false)

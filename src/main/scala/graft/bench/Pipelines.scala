@@ -1,6 +1,8 @@
 package graft.bench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.core.SeriesOps
@@ -146,17 +148,27 @@ object Pipelines {
     barrier(SeriesOps.withSplit(marked, key, ts, cfg.trainFrac, cfg.valFrac))
   }
 
+  /** `prep` joined with a model fit's per-row `cols`. The per-series
+    * models (Kalman, BSTS, GP, exact STL) emit fixed `series_id`/`ts`
+    * columns; they are matched against the caller's key (as a string)
+    * and time column, whatever those are named. */
+  private def joinFit(prep: DataFrame, fit: DataFrame, key: String,
+                      ts: String, cols: Column*): DataFrame = {
+    val f = fit.select(
+      col("series_id").as("__sid") +: col("ts").as("__fts") +: cols: _*)
+    prep.join(f,
+      prep(key).cast("string") === f("__sid") && prep(ts) === f("__fts"))
+      .drop("__sid", "__fts")
+  }
+
   /** M2 pipeline (kalman_model.py:146-243). */
   def runKalman(series: DataFrame, labels: DataFrame, key: String,
                 ts: String, value: String, cfg: Config)
       : (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
-    val kal = KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac)
-      .withColumnRenamed("series_id", "__sid")
-    val joined = prep.join(kal.select(col("__sid"), col(ts),
-        col("pred_mean"), col("pred_std"), col("resid")),
-      prep(key).cast("string") === col("__sid") && prep(ts) === kal(ts))
-      .drop("__sid").drop(kal(ts))
+    val joined = joinFit(prep,
+      KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac), key, ts,
+      col("pred_mean"), col("pred_std"), col("resid"))
     detectAndScore(barrier(joined), key, ts, cfg)
   }
 
@@ -166,13 +178,10 @@ object Pipelines {
              exact: Boolean = false): (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
     val dec =
-      if (exact) {
-        val d = StlExact.decompose(prep, key, ts, value, cfg.period)
-          .withColumnRenamed("series_id", "__sid")
-        prep.join(d.select(col("__sid"), col(ts), col("resid")),
-          prep(key).cast("string") === col("__sid") && prep(ts) === d(ts))
-          .drop("__sid").drop(d(ts))
-      } else StlLite.decompose(prep, key, ts, value, cfg.period)
+      if (exact)
+        joinFit(prep, StlExact.decompose(prep, key, ts, value, cfg.period),
+          key, ts, col("resid"))
+      else StlLite.decompose(prep, key, ts, value, cfg.period)
     detectAndScore(barrier(dec), key, ts, cfg)
   }
 
@@ -192,14 +201,10 @@ object Pipelines {
       : (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
     val base =
-      if (onStlResiduals) {
-        val d = StlExact.decompose(prep, key, ts, value, cfg.period)
-          .withColumnRenamed("series_id", "__sid")
-        prep.join(
-          d.select(col("__sid"), col(ts), col("resid").as("__target")),
-          prep(key).cast("string") === col("__sid") && prep(ts) === d(ts))
-          .drop("__sid").drop(d(ts))
-      } else prep.withColumn("__target", col(value))
+      if (onStlResiduals)
+        joinFit(prep, StlExact.decompose(prep, key, ts, value, cfg.period),
+          key, ts, col("resid").as("__target"))
+      else prep.withColumn("__target", col(value))
     val scaled = SeriesOps.standardScale(base, key, "__target", "__tn",
       popStd = true)
     val ar = AutoRegressor.run(barrier(scaled), key, ts, "__tn", seqLen,
@@ -216,13 +221,9 @@ object Pipelines {
       : (DataFrame, DataFrame) = {
     val cfg = if (cfg0.valFrac <= 0) cfg0.copy(valFrac = 0.25) else cfg0
     val prep = prepared(series, labels, key, ts, cfg)
-    val b = Bsts.run(prep, key, ts, value, cfg.period, 3, cfg.trainFrac)
-      .withColumnRenamed("series_id", "__sid")
-      .withColumnRenamed("split", "__msplit")
-    val joined = prep.join(
-      b.select(col("__sid"), col(ts), col("bsts_mean")),
-      prep(key).cast("string") === col("__sid") && prep(ts) === b(ts))
-      .drop("__sid").drop(b(ts))
+    val joined = joinFit(prep,
+        Bsts.run(prep, key, ts, value, cfg.period, 3, cfg.trainFrac),
+        key, ts, col("bsts_mean"))
       .withColumn("resid", col(value) - col("bsts_mean"))
     // run_bsts.py:55-57 centers the forecast-region residuals by their
     // median ("robust against model bias/collapse") before thresholding
@@ -254,14 +255,9 @@ object Pipelines {
                         Seq(Bsts.Trig(48.0, 10), Bsts.Trig(336.0, 10)))
       : (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
-    val b = Bsts.run(prep, key, ts, value, seasonal, cfg.trainFrac,
-        mle = true)
-      .withColumnRenamed("series_id", "__sid")
-      .withColumnRenamed("split", "__msplit")
-    val joined = prep.join(
-      b.select(col("__sid"), col(ts), col("bsts_mean")),
-      prep(key).cast("string") === col("__sid") && prep(ts) === b(ts))
-      .drop("__sid").drop(b(ts))
+    val joined = joinFit(prep,
+        Bsts.run(prep, key, ts, value, seasonal, cfg.trainFrac, mle = true),
+        key, ts, col("bsts_mean"))
       .withColumn("resid", col(value) - col("bsts_mean"))
     detectAndScore(barrier(joined), key, ts, cfg, tuneSplit = "Test")
   }
@@ -277,14 +273,10 @@ object Pipelines {
             sigmaSource: String = "rolling_centered")
       : (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
-    val g = GpRegressor.run(prep, key, ts, value, cfg.trainFrac, 1000,
-      cfg.period)
-      .withColumnRenamed("series_id", "__sid")
-      .withColumnRenamed("split", "__msplit")
-    val joined = prep.join(
-      g.select(col("__sid"), col(ts), col("pred_mean"), col("pred_std")),
-      prep(key).cast("string") === col("__sid") && prep(ts) === g(ts))
-      .drop("__sid").drop(g(ts))
+    val joined = joinFit(prep,
+        GpRegressor.run(prep, key, ts, value, cfg.trainFrac, 1000,
+          cfg.period),
+        key, ts, col("pred_mean"), col("pred_std"))
       .withColumn("resid", col(value) - col("pred_mean"))
     detectAndScore(barrier(joined), key, ts, cfg,
       sigmaSource = sigmaSource)
@@ -334,14 +326,9 @@ object Pipelines {
         SeriesOps.zscore(col("resid"), col("__mad") + lit(1e-9)))
       .drop("__mad", "trend", "seasonal", "resid", "rn")
     // branch B: Kalman one-step z
-    val kal = KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac)
-      .withColumnRenamed("series_id", "__sid")
-    val ab = a.join(
-      kal.select(col("__sid"), col(ts).as("__kts"),
-        (abs(col("resid")) / (col("pred_std") + lit(1e-9)))
-          .as("score_kalman")),
-      a(key).cast("string") === col("__sid") && a(ts) === col("__kts"))
-      .drop("__sid", "__kts")
+    val ab = joinFit(a,
+      KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac), key, ts,
+      (abs(col("resid")) / (col("pred_std") + lit(1e-9))).as("score_kalman"))
     val combined = barrier(
       Hybrid.combineEqual(ab, Seq("score_stl", "score_kalman")))
     sweepOnCombined(combined, key, ts, cfg)
@@ -360,32 +347,25 @@ object Pipelines {
                         seqLen: Int = 48): (DataFrame, DataFrame) = {
     val prep = prepared(series, labels, key, ts, cfg)
     // member 1: exact STL residual, robust z
-    val stlD = StlExact.decompose(prep, key, ts, value, cfg.period)
-      .withColumnRenamed("series_id", "__sid")
-    val withStl = prep.join(
-      stlD.select(col("__sid"), col(ts).as("__sts"),
-        col("resid").as("__stl_resid")),
-      prep(key).cast("string") === col("__sid") && prep(ts) === col("__sts"))
-      .drop("__sid", "__sts")
+    val withStl = joinFit(prep,
+      StlExact.decompose(prep, key, ts, value, cfg.period), key, ts,
+      col("resid").as("__stl_resid"))
     val mad = SeriesOps.madSigma(withStl, key, "__stl_resid", "__mad")
     val m1 = barrier(withStl.join(broadcast(mad), Seq(key))
       .withColumn("score_stl",
         abs(col("__stl_resid")) / (col("__mad") + lit(1e-9)))
       .drop("__mad"))
     // member 2: GP predictive-std z on Test, 0 on Train
-    val gp = GpRegressor.run(prep, key, ts, value, cfg.trainFrac, 1000,
-        cfg.period)
-      .withColumnRenamed("series_id", "__gsid")
-    val m2 = m1.join(
-      gp.select(col("__gsid"), col(ts).as("__gts"),
-        col("pred_mean").as("__gm"), col("pred_std").as("__gs"),
-        col("split").as("__gsplit")),
-      m1(key).cast("string") === col("__gsid") && m1(ts) === col("__gts"))
+    val m2 = joinFit(m1,
+        GpRegressor.run(prep, key, ts, value, cfg.trainFrac, 1000,
+          cfg.period),
+        key, ts, col("pred_mean").as("__gm"), col("pred_std").as("__gs"),
+        col("split").as("__gsplit"))
       .withColumn("score_gp",
         when(col("__gsplit") === "Test",
           abs(col(value) - col("__gm")) / (col("__gs") + lit(1e-9)))
           .otherwise(lit(0.0)))
-      .drop("__gsid", "__gts", "__gm", "__gs", "__gsplit")
+      .drop("__gm", "__gs", "__gsplit")
     // member 3: AR forecast of the (scaled) STL residual, rolling z on
     // the second-order residual; rows without a full lag window score 0
     val arIn = barrier(SeriesOps.standardScale(
@@ -437,7 +417,7 @@ object Pipelines {
             col("fp_per_day").as("FP_per_Day"),
             col("median_latency_minutes").as("Latency_Min")))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass)
             .warn(s"model $m failed: ${e.getMessage}")
           None

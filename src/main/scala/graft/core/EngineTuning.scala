@@ -2,41 +2,18 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine session tuning — kept as the one place a session-wide AQE
-  * knob lives, now STOCK by default (OPTIMIZATION_r19.md §1).
+/** Engine session tuning: the session-wide confs the engine sets on top
+  * of Spark's defaults (applied by [[Session]]).
   *
-  * History: Spark's AQE partition coalescing picks the post-shuffle
-  * partition count from SHUFFLE BYTES — with `parallelismFirst=true`
-  * (default) the target size is `max(totalShuffleBytes /
-  * defaultParallelism, minPartitionSize)` and the `minPartitionSize`
-  * floor defaults to 1 MB. This engine's heavy operators shuffle
-  * kilobytes of keys/series into CPU-dominated work (per-series model
-  * MLEs, pair-exploding bucket joins), so the byte heuristic starved
-  * them: at sf0.1 the 1.8 MB events shuffle coalesced to 2 partitions
-  * and ran a 1500-series GP fit on two cores. r18 lowered the floor to
-  * 256k session-wide, which restored those operators 2–6x — but the
-  * driver's 32-core run then measured the MANY-STAGE query family
-  * blowing up 4–8x under host contention (q_sweep_curve 2.5 → 19.8 s,
-  * bimodal medians; absent at 8 cores): hundreds of tiny shuffles ×
-  * 4–8x more tasks per stage is a fragility tax a session conf cannot
-  * scope (VERDICT r18 #1).
-  *
-  * r19 therefore moved the parallelism fix to the starved operators
-  * themselves — `core/Grouped.pinned` gives every per-series
-  * `mapGroups` model an AQE-proof pinned exchange, and the pair-join
-  * explosion sites pin their join-input partitioning the same way
-  * (the `Dedup.simhashCandidatesFromFps` pattern) — and the session
-  * floor is back to the STOCK 1m: many-stage queries get stock AQE
-  * task counts, CPU-heavy operators no longer need the floor at all.
-  * `SPARK_GRAFT_MIN_COALESCE` stays parameterised for A/B-ing the
-  * session-wide effect itself (the r19 adjudication data: 256k vs 1m
-  * full-sweep records in OPTIMIZATION_r19.md §1).
+  * AQE partition coalescing stays stock (`minPartitionSize` 1 MiB): the
+  * CPU-heavy per-series operators get their parallelism from pinned
+  * exchanges (`core/Grouped.pinned`, the pinned pair-join inputs), since
+  * a lower session-wide floor blew up the many-stage queries 4-8x under
+  * contention at 32 cores (OPTIMIZATION_r19.md §1).
   */
 object EngineTuning {
 
   def conf: Map[String, String] = Map(
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-      sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "1m"),
     // The engine's bit-exactness contract makes every oracle-checked
     // float sum an ORDERED fold (core/Folds: aggregate over
     // array_sort(collect_list(...))) — a typed-buffer aggregate that

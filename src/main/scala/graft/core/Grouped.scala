@@ -50,8 +50,8 @@ object Grouped {
   /** Stock shuffle parallelism, never below the core count. */
   def pinnedPartitions(ds: Dataset[_]): Int = {
     val sess = ds.sparkSession
-    val conf = try sess.conf.get("spark.sql.shuffle.partitions").toInt
-    catch { case _: Throwable => 0 }
+    val conf = sess.conf.getOption("spark.sql.shuffle.partitions")
+      .flatMap(_.toIntOption).getOrElse(0)
     math.max(conf, sess.sparkContext.defaultParallelism)
   }
 

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -75,19 +76,32 @@ object NabIo {
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(dir)
 
   /** S4: metrics JSON sink — one nested record per run
-    * (`kalman_model.py:239-240`). */
+    * (`kalman_model.py:239-240`). Null fields are written as `null`,
+    * like the reference's `json.dump`, so a column that is null on
+    * every row still comes back from [[readMetricsTree]]. */
   def writeMetricsJson(df: DataFrame, dir: String): Unit =
-    df.coalesce(1).write.mode("overwrite").json(dir)
+    df.coalesce(1).write.mode("overwrite").option("ignoreNullFields", "false")
+      .json(dir)
 
-  /** S5: metrics-tree scan — glob over `results/<model>/<dataset>/
-    * metrics.json`, deriving model/dataset columns from the path like
-    * `aggregate_metrics.py:13-23`. */
-  def readMetricsTree(spark: SparkSession, resultsRoot: String): DataFrame =
-    spark.read.json(s"$resultsRoot/*/*/metrics.json*")
-      .withColumn("__path", input_file_name())
-      .withColumn("Model",
-        upper(regexp_extract(col("__path"), "([^/]+)/[^/]+/[^/]+$", 1)))
-      .withColumn("Dataset", regexp_extract(col("__path"),
-        "[^/]+/([^/]+)/[^/]+$", 1))
-      .drop("__path")
+  /** S5: metrics-tree scan over `<resultsRoot>/<model>/<dataset>/`, in
+    * either layout: the reference's `metrics.json` file or the
+    * `metrics/part-*.json` directory [[writeMetricsJson]] writes. Model
+    * (upper-cased) and Dataset are the two path segments directly under
+    * `resultsRoot`, like `aggregate_metrics.py:13-23`. */
+  def readMetricsTree(spark: SparkSession, resultsRoot: String): DataFrame = {
+    val root = new Path(resultsRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = Seq("metrics.json*", "metrics/part-*.json*").flatMap { leaf =>
+      Option(fs.globStatus(new Path(root, s"*/*/$leaf"))).toSeq.flatten
+    }.map(_.getPath.toString)
+    if (files.isEmpty) throw new java.io.FileNotFoundException(
+      s"no metrics.json or metrics/part-*.json under $resultsRoot/*/*")
+    // a file's path is the root's segments, then <model>/<dataset>/...
+    val depth = fs.makeQualified(root).toUri.getPath.split("/").count(_.nonEmpty)
+    val segs = split(regexp_replace(input_file_name(),
+      "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?", ""), "/")
+    spark.read.json(files: _*)
+      .withColumn("Model", upper(element_at(segs, depth + 2)))
+      .withColumn("Dataset", element_at(segs, depth + 3))
+  }
 }

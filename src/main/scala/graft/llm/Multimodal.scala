@@ -6,6 +6,8 @@ import javax.imageio.ImageIO
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
   AudioSystem}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -193,7 +195,7 @@ object Multimodal {
               math.sqrt(sumSq.toDouble / frames), zcr))
           }
         }
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     }
 
   /** Batch audio feature extraction: mapPartitions over the binary
@@ -340,7 +342,7 @@ object Multimodal {
           if (sniffMjpeg(bytes))
             splitMjpegFrames(bytes).flatMap(fb =>
               try Option(ImageIO.read(new ByteArrayInputStream(fb)))
-              catch { case _: Throwable => None })
+              catch { case NonFatal(_) => None })
           else Vector.empty
         if (frames.isEmpty) {
           (id, Option.empty[Int], Option.empty[Int], Option.empty[Int],
@@ -394,7 +396,7 @@ object Multimodal {
   def decodeImage(bytes: Array[Byte]): Option[BufferedImage] =
     sniffImageMime(bytes).flatMap { _ =>
       try Option(ImageIO.read(new ByteArrayInputStream(bytes)))
-      catch { case _: Throwable => None }
+      catch { case NonFatal(_) => None }
     }
 
   /** Rec.601 luma of a packed ARGB pixel — the deterministic scalar the

@@ -19,7 +19,8 @@ import graft.models.DetKMeans
   * neighbors at cosine 0.26-0.40): measured recall 0.93 at
   * oversample 8 vs 0.6 for m=8/ksub=16 — on a corpus with a real
   * similarity gap the coarser, smaller-code settings suffice
-  * (`graft.tools.PqProbe` sweeps the grid).
+  * (the grid sweep that measured this:
+  * `git show cfef355:src/test/scala/graft/tools/PqProbe.scala`).
   *
   * Search is asymmetric distance computation (ADC): per query, an
   * `m × ksub` table of exact sub-distances to every codeword is

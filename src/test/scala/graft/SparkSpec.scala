@@ -28,15 +28,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The bench session shape on two cores: every spec runs under the
+    * same confs as Bench, Verify and QueryProfile. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Session(2)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,5 +1,6 @@
 package graft.bench
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -134,5 +135,72 @@ class PipelinesSpec extends SparkSpec {
     val f1s = rows.map(_.getAs[Double]("Event_F1"))
     f1s.sliding(2).foreach { case Array(x, y) => assert(x >= y - 1e-12) }
     assert(f1s.max > 0.5, s"best F1 ${f1s.max}")
+  }
+
+  /** A pipeline given a time column named `timestamp` must give the
+    * metrics it gives with `ts`: the per-series models emit a fixed `ts`
+    * column, and the pipelines join it to the caller's time column. */
+  private def sameMetricsUnderTimestamp(
+      run: (DataFrame, DataFrame, String) => (DataFrame, DataFrame)): Unit = {
+    val (series, labels) = fixture
+    def rows(m: DataFrame): (Seq[String], Seq[Row]) = {
+      val cols = m.columns.toSeq.sorted
+      (cols, m.select(cols.map(col): _*).orderBy("series_id").collect().toSeq)
+    }
+    val byTs = rows(run(series, labels, "ts")._2)
+    val byTimestamp = rows(run(series.withColumnRenamed("ts", "timestamp"),
+      labels, "timestamp")._2)
+    assert(byTs._2.nonEmpty)
+    assert(byTimestamp === byTs)
+  }
+
+  private val cfg24 = Pipelines.Config(period = 24, rollingWindow = 24)
+
+  test("runKalman takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runKalman(s, l, "series_id", ts, "value", cfg24))
+  }
+
+  test("runStl takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runStl(s, l, "series_id", ts, "value", cfg24))
+  }
+
+  test("runStl exact takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runStl(s, l, "series_id", ts, "value", cfg24, exact = true))
+  }
+
+  test("runAutoRegressor takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runAutoRegressor(s, l, "series_id", ts, "value", cfg24,
+        seqLen = 12))
+  }
+
+  test("runBsts takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runBsts(s, l, "series_id", ts, "value", cfg24))
+  }
+
+  test("runEnhancedBsts takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runEnhancedBsts(s, l, "series_id", ts, "value", cfg24,
+        seasonal = Seq(graft.models.Bsts.Dummy(24))))
+  }
+
+  test("runGp takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runGp(s, l, "series_id", ts, "value", cfg24))
+  }
+
+  test("runHybrid takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runHybrid(s, l, "series_id", ts, "value", cfg24))
+  }
+
+  test("runHybridEnsemble takes any time-column name") {
+    sameMetricsUnderTimestamp((s, l, ts) =>
+      Pipelines.runHybridEnsemble(s, l, "series_id", ts, "value", cfg24,
+        seqLen = 12))
   }
 }

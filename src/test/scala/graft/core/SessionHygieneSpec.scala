@@ -1,14 +1,17 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the long-session store caps (the r17 session-aging fix): the
-  * conf set must cover exactly the four unbounded-growth stores, every
-  * cap must be strictly below Spark's default (otherwise the "cap" is
-  * a no-op), and apply() must hand every pair to the builder. The
-  * effect on a live sweep is verified by the bench instrument itself
-  * (anchors_mid in BENCH_DEF; hygiene:true in the record line).
+/** Pins the session shape. The long-session store caps (the r17
+  * session-aging fix) must cover exactly the four unbounded-growth
+  * stores, every cap must be strictly below Spark's default (otherwise
+  * the "cap" is a no-op), and apply() must hand every pair to the
+  * builder. `core.Session` must carry the base, tuning and hygiene confs,
+  * and must be the only place the engine builds a session, so Bench,
+  * Verify, QueryProfile and the test suite all run one shape.
   */
 class SessionHygieneSpec extends AnyFunSuite {
 
@@ -46,5 +49,41 @@ class SessionHygieneSpec extends AnyFunSuite {
     SessionHygiene.conf.foreach { case (k, v) =>
       assert(opts.get(k).contains(v), s"builder lost $k")
     }
+  }
+
+  test("Session(2) carries the base, tuning and hygiene confs") {
+    val conf = Session(2).sparkContext.getConf
+    val want = Session.base(2) ++ EngineTuning.conf ++ SessionHygiene.conf
+    want.foreach { case (k, v) =>
+      assert(conf.getOption(k).contains(v), s"session lost $k=$v")
+    }
+    assert(Session.base(2)("spark.master") == "local[2]")
+  }
+
+  test("the coalescing floor the engine no longer sets is Spark's 1 MiB") {
+    // EngineTuning dropped its minPartitionSize entry because "1m" was
+    // the stock value; a Spark upgrade that moves the default shows here
+    val spark = Session(2)
+    assert(!EngineTuning.conf.keySet.exists(_.contains("minPartitionSize")))
+    assert(spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+      == 1024L * 1024L)
+  }
+
+  test("SparkSession.builder is called only by core.Session") {
+    // the test-side call is this spec's builder-level test, which reads
+    // the options a builder holds before any session exists
+    def calls(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(f => java.nio.file.Files.readString(f)
+          .contains("SparkSession.builder"))
+        .map(root.relativize(_).toString.replace('\\', '/')).toSeq.sorted
+      finally files.close()
+    }
+    assert(calls("src/main/scala") == Seq("graft/core/Session.scala"))
+    assert(calls("src/test/scala") == Seq("graft/core/SessionHygieneSpec.scala"))
   }
 }

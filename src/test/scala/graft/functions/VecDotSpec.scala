@@ -30,30 +30,29 @@ class VecDotSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects vec_dot at session build (SQL path)") {
-    import org.apache.spark.sql.SparkSession
-    // build a sibling session over the SAME SparkContext with the
-    // extensions applied (the spark.sql.extensions deployment path);
-    // clear the builder's session cache first or getOrCreate would hand
-    // back the shared fixture session untouched
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val withExt = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions()(_))
-        .getOrCreate()
-      assert(withExt ne spark, "expected a fresh session")
-      assert(withExt.catalog.functionExists("vec_dot"))
-      val got = withExt
-        .sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
-        .head().getDouble(0)
-      assert(math.abs(got - 11.0) < 1e-12)
-    } finally {
-      // restore the shared fixture session for the other suites; the
-      // sibling session shares its SparkContext, so no stop() here
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
+    import org.apache.spark.sql.SparkSessionExtensions
+    // record what the extension injects, then register it the way a
+    // session built with `spark.sql.extensions` does, into a sibling
+    // session (the shared fixture's registry stays as it is)
+    val ext = new SparkSessionExtensions {
+      val injected =
+        scala.collection.mutable.ArrayBuffer.empty[FunctionDescription]
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f
+        super.injectFunction(f)
+      }
     }
+    new GraftExtensions()(ext)
+    assert(ext.injected.map(_._1.funcName).contains("vec_dot"))
+    val withExt = spark.newSession()
+    ext.injected.foreach { case (id, info, builder) =>
+      withExt.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+    assert(withExt.catalog.functionExists("vec_dot"))
+    val got = withExt
+      .sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
+      .head().getDouble(0)
+    assert(math.abs(got - 11.0) < 1e-12)
   }
 
   test("vec_dot agrees with Similarity.cosine on real embeddings shape") {

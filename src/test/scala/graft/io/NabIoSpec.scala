@@ -99,4 +99,27 @@ class NabIoSpec extends SparkSpec {
     assert(r.getAs[String]("Model") === "KALMAN")
     assert(r.getAs[String]("Dataset") === "nyc_taxi.csv")
   }
+
+  test("metrics tree scan reads the tree Pipelines.persist writes") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("results").toFile.getAbsolutePath
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    for (model <- Seq("stl", "kalman")) {
+      val pred = Seq(("a", ts, 1), ("b", ts, 0))
+        .toDF("series_id", "ts", "detected")
+      val metrics = Seq(("a", 0.5, Option.empty[Double]),
+          ("b", 1.0, Option.empty[Double]))
+        .toDF("series_id", "f1", "median_latency_minutes")
+      graft.bench.Pipelines.persist(s"$root/$model/fleet", pred, metrics,
+        "series_id")
+    }
+    val rows = NabIo.readMetricsTree(spark, root)
+      .select("Model", "Dataset", "series_id", "f1", "median_latency_minutes")
+      .orderBy("Model", "series_id").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getDouble(3), r.isNullAt(4)))
+    assert(rows.toSeq === Seq(
+      ("KALMAN", "fleet", "a", 0.5, true), ("KALMAN", "fleet", "b", 1.0, true),
+      ("STL", "fleet", "a", 0.5, true), ("STL", "fleet", "b", 1.0, true)))
+  }
 }

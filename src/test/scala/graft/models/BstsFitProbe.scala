@@ -59,9 +59,7 @@ object BstsFitProbe {
 
     // flag rate each optimum produces through the REAL detection tail
     // (the GoldenSpec full-pipeline cfg; reference artifact flags 0.943)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     import spark.implicits._

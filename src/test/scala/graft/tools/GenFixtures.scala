@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the committed sf0.01 fixture parquet used as oracles for
   * model queries whose math is not SQL-expressible (see
   * `fixtures/README.md`). Run after any INTENTIONAL behavior change to a
@@ -32,10 +30,7 @@ object GenFixtures {
     "q_semdedup")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("ERROR")
     val sfDir = "/root/testdata/sf0.01"
     val outRoot = "/root/repo/fixtures/sf0.01"
