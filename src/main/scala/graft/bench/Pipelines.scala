@@ -22,6 +22,12 @@ import graft.ensemble.Hybrid
   * kalman_model.py:70-76) → threshold sweep with persistence and rate
   * guard (A10/P6/W8) → eventize (W7) → event + business metrics (J3/J4/
   * A5-A7) → prediction/metrics sinks (S3/S4).
+  *
+  * Everything from the threshold sweep on is ONE tail ([[scoreTail]]),
+  * the way the reference scores every run script with `src/evaluate.py`:
+  * the single-model pipelines reach it through [[detectAndScore]]'s
+  * z-score, the ensembles with their combined score. Each run's metrics
+  * carry one row per series, zeroed where neither side has an event.
   */
 object Pipelines {
 
@@ -30,7 +36,10 @@ object Pipelines {
     * duplicates the whole upstream plan subtree and Catalyst analysis
     * goes quadratic-to-exponential (measured: minutes of driver CPU on
     * a 400-row fixture). `localCheckpoint` materializes and cuts the
-    * plan; on a cluster the same barrier would be a persisted table. */
+    * plan; on a cluster the same barrier would be a persisted table.
+    * Each costs at least one job, so one stands only where a frame is
+    * read more than once and would otherwise re-run a model fit or copy
+    * a large plan; each call site says which. */
   private def barrier(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
@@ -46,15 +55,18 @@ object Pipelines {
       maxRate: Double = 0.10,
       period: Int = 48)
 
-  /** Shared detector tail: given a frame with `resid` (+ optional
-    * per-row `pred_std`), build the z-score, sweep k on the tuning
-    * split, apply the winner, and assemble the metrics record per
-    * series. Returns (annotated predictions, metrics).
+  /** The detector of every pipeline: build the z-score from `resid`
+    * (+ optional per-row `pred_std`), then run the shared tail
+    * ([[scoreTail]]: sweep k on the tuning split, apply the winner on
+    * Test, persistence, eventize, metrics). Returns (annotated
+    * predictions, metrics).
     *
     * `sigmaSource` selects the reference's two rolling detectors:
     *  - "rolling" (default): `detect_anomalies_by_residual`
     *    (kalman_model.py:55-97, the notebook pipelines) — score
-    *    |resid| / rolling σ with the train-std zero-σ fallback;
+    *    |resid| / rolling σ with the train-std zero-σ fallback. It reads
+    *    `df` twice (the window and the train std), so callers in this
+    *    mode checkpoint a model fit before passing it in;
     *  - "rolling_centered": `rolling_sigma_threshold` (utils.py:40-73,
     *    the src/run_*.py pipelines) — score |resid − rolling μ| /
     *    (rolling σ + 1e-6), NO train fallback, and the window restarts
@@ -64,9 +76,6 @@ object Pipelines {
   def detectAndScore(df: DataFrame, series: String, ts: String,
                      cfg: Config, tuneSplit: String = "Test",
                      sigmaSource: String = "rolling"): (DataFrame, DataFrame) = {
-    // train residual std for the zero-sigma fallback (W2)
-    val trainStd = df.filter(col("split") === "Train")
-      .groupBy(series).agg(stddev_samp(col("resid")).as("__train_std"))
     val withSigma = sigmaSource match {
       case "pred_std" =>
         df.withColumn("__sigma", col("pred_std") + lit(1e-6))
@@ -78,6 +87,9 @@ object Pipelines {
           .withColumn("__sigma", col("__roll_std")) // eps already added
           .withColumn("__center", col("__roll_mean"))
       case _ =>
+        // train residual std for the zero-sigma fallback (W2)
+        val trainStd = df.filter(col("split") === "Train")
+          .groupBy(series).agg(stddev_samp(col("resid")).as("__train_std"))
         SeriesOps.withRollingStats(df, series, ts, "resid",
           cfg.rollingWindow, cfg.minPeriods, "__roll_mean", "__roll_std")
           .join(broadcast(trainStd), Seq(series), "left")
@@ -92,31 +104,52 @@ object Pipelines {
               .otherwise(lit(1.0)))
           .withColumn("__center", lit(0.0))
     }
-    val scored = barrier(withSigma
-      .withColumn("score",
-        SeriesOps.zscore(col("resid") - col("__center"), col("__sigma"))))
-    val tune = scored.filter(col("split") === tuneSplit)
-    val truthTune = Events.eventize(tune, Seq(series), ts, "is_anomaly",
-      cfg.gap)
-    val best = Metrics.sweep(tune.select(col(series), col(ts), col("score")),
-      Seq(series), ts, "score", cfg.ks, cfg.persistence, cfg.gap,
-      truthTune, cfg.maxRate)
+    scoreTail(withSigma.withColumn("score",
+        SeriesOps.zscore(col("resid") - col("__center"), col("__sigma"))),
+      series, ts, cfg, tuneSplit, "score")
+  }
+
+  /** The one detector tail (evaluate.py's sweep → persistence →
+    * eventize → event metrics; SURVEY §3 E1-E3), shared by
+    * [[detectAndScore]] and the ensembles, whose combined score IS the
+    * z. Sweeps k over `score` on `tuneSplit`, applies the winner on
+    * Test, and builds one metrics row per series in `scored`. */
+  private def scoreTail(scored0: DataFrame, series: String, ts: String,
+                        cfg: Config, tuneSplit: String,
+                        score: String): (DataFrame, DataFrame) = {
+    // kept: the sweep, the apply step, the truth events and the series
+    // anchor all read this frame; without it each re-runs the sigma
+    // windows (or an ensemble's member fits)
+    val scored = barrier(scored0)
+    // the truth events of the tune and Test splits in one pass keyed by
+    // (series, split): the row ordinal restarts per split, as the
+    // reference scores each region's slice on its own
+    val truthBySplit = Events.eventize(
+      scored.filter(col("split").isin(tuneSplit, "Test")),
+      Seq(series, "split"), ts, "is_anomaly", cfg.gap)
+    val truth = truthBySplit.filter(col("split") === "Test")
+    // kept: the apply join and the metrics row both read the winner;
+    // without it the whole sweep plan is copied into each
+    val best = barrier(Metrics.sweep(
+      scored.filter(col("split") === tuneSplit)
+        .select(col(series), col(ts), col(score)),
+      Seq(series), ts, score, cfg.ks, cfg.persistence, cfg.gap,
+      truthBySplit.filter(col("split") === tuneSplit), cfg.maxRate))
     // apply the winning k on the Test split; a series where EVERY
     // candidate failed the rate guard has no sweep row — the reference
-    // scripts then keep their initial k = 3.0 (run_gp.py:90 et al.), so
-    // the join is left + coalesce rather than inner (which would
-    // silently drop the series from the predictions)
+    // scripts then keep their initial k = 3.0 (run_gp.py:90,
+    // run_hybrid.py:145 et al.), so the join is left + coalesce rather
+    // than inner (which would silently drop the series from the
+    // predictions)
     val test = scored.filter(col("split") === "Test")
-      .join(broadcast(barrier(best).select(col(series), col("best_k"))),
+      .join(broadcast(best.select(col(series), col("best_k"))),
         Seq(series), "left")
       .withColumn("flag",
-        SeriesOps.thresholdFlag(col("score"),
-          coalesce(col("best_k"), lit(3.0))))
+        SeriesOps.thresholdFlag(col(score), coalesce(col("best_k"), lit(3.0))))
     val persisted = Events.persistFilter(test, Seq(series), ts, "flag",
       cfg.persistence, "detected")
     val pred = Events.eventize(persisted, Seq(series), ts, "detected",
       cfg.gap)
-    val truth = Events.eventize(test, Seq(series), ts, "is_anomaly", cfg.gap)
     val eventM = Events.eventLevelMetrics(pred, truth, Seq(series))
     val pointM = Metrics.pointwise(persisted, Seq(series), "is_anomaly",
       "detected")
@@ -127,8 +160,7 @@ object Pipelines {
     // anchor on EVERY series in the frame: a series with no events on
     // either side still gets a (zeroed) metrics row, like the reference's
     // per-run metrics.json
-    val allSeries = scored.select(series).distinct()
-    val metrics = allSeries
+    val metrics = scored.select(series).distinct()
       .join(eventM, Seq(series), "left")
       .join(pointM, Seq(series), "left")
       .join(bizM, Seq(series), "left")
@@ -145,6 +177,8 @@ object Pipelines {
                        ts: String, cfg: Config): DataFrame = {
     val marked = SeriesOps.markLabelWindows(series, labels, key, ts,
       "label_ts", cfg.labelWindowRows)
+    // kept: the model fit and the join of its output both read `prep`;
+    // without it the label-window join and split windows run twice
     barrier(SeriesOps.withSplit(marked, key, ts, cfg.trainFrac, cfg.valFrac))
   }
 
@@ -169,6 +203,7 @@ object Pipelines {
     val joined = joinFit(prep,
       KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac), key, ts,
       col("pred_mean"), col("pred_std"), col("resid"))
+    // kept: the "rolling" sigma reads its input twice (the fit re-runs)
     detectAndScore(barrier(joined), key, ts, cfg)
   }
 
@@ -182,6 +217,7 @@ object Pipelines {
         joinFit(prep, StlExact.decompose(prep, key, ts, value, cfg.period),
           key, ts, col("resid"))
       else StlLite.decompose(prep, key, ts, value, cfg.period)
+    // kept: the "rolling" sigma reads its input twice (the fit re-runs)
     detectAndScore(barrier(dec), key, ts, cfg)
   }
 
@@ -207,10 +243,13 @@ object Pipelines {
       else prep.withColumn("__target", col(value))
     val scaled = SeriesOps.standardScale(base, key, "__target", "__tn",
       popStd = true)
+    // kept: the scaling reads `base` twice and the AR fit reads `scaled`
+    // twice; without it the STL fit runs up to four times
     val ar = AutoRegressor.run(barrier(scaled), key, ts, "__tn", seqLen,
       cfg.trainFrac, regressor)
     // default "rolling" = the notebook LSTM recipe the golden replays;
-    // pass "rolling_centered" for src/run_lstm.py's tail
+    // pass "rolling_centered" for src/run_lstm.py's tail. Kept: the
+    // "rolling" sigma reads its input twice (the AR fit re-runs)
     detectAndScore(barrier(ar.drop("__target", "__tn")), key, ts, cfg,
       sigmaSource = sigmaSource)
   }
@@ -237,7 +276,8 @@ object Pipelines {
       .drop("__rmed")
     // run_bsts.py's detector is rolling_sigma_threshold (mean-centered,
     // per-region window restart) — pinned exactly by the results/bsts
-    // detector-tail goldens on all three NAB datasets
+    // detector-tail goldens on all three NAB datasets. Kept: the median
+    // centering reads `joined` twice (the BSTS fit re-runs)
     detectAndScore(barrier(centered), key, ts, cfg,
       tuneSplit = "Validation", sigmaSource = "rolling_centered")
   }
@@ -259,6 +299,7 @@ object Pipelines {
         Bsts.run(prep, key, ts, value, seasonal, cfg.trainFrac, mle = true),
         key, ts, col("bsts_mean"))
       .withColumn("resid", col(value) - col("bsts_mean"))
+    // kept: the "rolling" sigma reads its input twice (the fit re-runs)
     detectAndScore(barrier(joined), key, ts, cfg, tuneSplit = "Test")
   }
 
@@ -278,38 +319,7 @@ object Pipelines {
           cfg.period),
         key, ts, col("pred_mean"), col("pred_std"))
       .withColumn("resid", col(value) - col("pred_mean"))
-    detectAndScore(barrier(joined), key, ts, cfg,
-      sigmaSource = sigmaSource)
-  }
-
-  /** Shared ensemble tail: the combined score IS the z — sweep the
-    * threshold on the Test region directly, apply, persist, score. */
-  private def sweepOnCombined(combined: DataFrame, key: String, ts: String,
-                              cfg: Config): (DataFrame, DataFrame) = {
-    val tune = combined.filter(col("split") === "Test")
-    val truthTune = Events.eventize(tune, Seq(key), ts, "is_anomaly",
-      cfg.gap)
-    val best = Metrics.sweep(
-      tune.select(col(key), col(ts), col("combined_score")), Seq(key), ts,
-      "combined_score", cfg.ks, cfg.persistence, cfg.gap, truthTune,
-      cfg.maxRate)
-    // left + coalesce: the reference's initial best_thresh = 3.0 applies
-    // when the rate guard rejects every candidate (run_hybrid.py:145)
-    val test = tune
-      .join(broadcast(barrier(best).select(col(key), col("best_k"))),
-        Seq(key), "left")
-      .withColumn("flag",
-        SeriesOps.thresholdFlag(col("combined_score"),
-          coalesce(col("best_k"), lit(3.0))))
-    val persisted = Events.persistFilter(test, Seq(key), ts, "flag",
-      cfg.persistence, "detected")
-    val pred = Events.eventize(persisted, Seq(key), ts, "detected", cfg.gap)
-    val truth = Events.eventize(test, Seq(key), ts, "is_anomaly", cfg.gap)
-    val metrics = Events.eventLevelMetrics(pred, truth, Seq(key))
-      .join(Metrics.business(test, Seq(key), ts, pred, truth), Seq(key),
-        "left")
-      .join(best, Seq(key), "left")
-    (persisted, metrics)
+    detectAndScore(joined, key, ts, cfg, sigmaSource = sigmaSource)
   }
 
   /** M8 pipeline: equal-weight mean of STL-MAD and Kalman z-scores,
@@ -329,9 +339,8 @@ object Pipelines {
     val ab = joinFit(a,
       KalmanLocalLevel.run(prep, key, ts, value, cfg.trainFrac), key, ts,
       (abs(col("resid")) / (col("pred_std") + lit(1e-9))).as("score_kalman"))
-    val combined = barrier(
-      Hybrid.combineEqual(ab, Seq("score_stl", "score_kalman")))
-    sweepOnCombined(combined, key, ts, cfg)
+    scoreTail(Hybrid.combineEqual(ab, Seq("score_stl", "score_kalman")),
+      key, ts, cfg, "Test", "combined_score")
   }
 
   /** M8 reference-recipe ensemble (`src/run_hybrid.py`): equal-thirds
@@ -351,12 +360,14 @@ object Pipelines {
       StlExact.decompose(prep, key, ts, value, cfg.period), key, ts,
       col("resid").as("__stl_resid"))
     val mad = SeriesOps.madSigma(withStl, key, "__stl_resid", "__mad")
+    // kept: the MAD reads `withStl` twice more (the STL fit re-runs)
     val m1 = barrier(withStl.join(broadcast(mad), Seq(key))
       .withColumn("score_stl",
         abs(col("__stl_resid")) / (col("__mad") + lit(1e-9)))
       .drop("__mad"))
-    // member 2: GP predictive-std z on Test, 0 on Train
-    val m2 = joinFit(m1,
+    // member 2: GP predictive-std z on Test, 0 on Train. Kept: member 3
+    // and the final join both read `m2` (the GP fit re-runs)
+    val m2 = barrier(joinFit(m1,
         GpRegressor.run(prep, key, ts, value, cfg.trainFrac, 1000,
           cfg.period),
         key, ts, col("pred_mean").as("__gm"), col("pred_std").as("__gs"),
@@ -365,12 +376,12 @@ object Pipelines {
         when(col("__gsplit") === "Test",
           abs(col(value) - col("__gm")) / (col("__gs") + lit(1e-9)))
           .otherwise(lit(0.0)))
-      .drop("__gm", "__gs", "__gsplit")
+      .drop("__gm", "__gs", "__gsplit"))
     // member 3: AR forecast of the (scaled) STL residual, rolling z on
     // the second-order residual; rows without a full lag window score 0
-    val arIn = barrier(SeriesOps.standardScale(
+    val arIn = SeriesOps.standardScale(
       m2.select(col(key), col(ts), col("__stl_resid"), col("split")),
-      key, "__stl_resid", "__tn", popStd = true))
+      key, "__stl_resid", "__tn", popStd = true)
     val arOut = AutoRegressor.run(arIn, key, ts, "__tn", seqLen,
       cfg.trainFrac)
     val arScored = SeriesOps.withRollingStats(arOut, key, ts, "resid",
@@ -382,10 +393,33 @@ object Pipelines {
         "left_outer")
       .withColumn("score_ar", coalesce(col("__ar_score"), lit(0.0)))
       .drop("__asid", "__ats", "__ar_score")
-    val combined = barrier(Hybrid.combineEqual(m3,
-      Seq("score_stl", "score_gp", "score_ar")))
-    sweepOnCombined(combined, key, ts, cfg)
+    scoreTail(Hybrid.combineEqual(m3,
+        Seq("score_stl", "score_gp", "score_ar")),
+      key, ts, cfg, "Test", "combined_score")
   }
+
+  /** One pipeline by its E1 model name. */
+  private[bench] def runModel(m: String, series: DataFrame, labels: DataFrame,
+                              key: String, ts: String, value: String,
+                              cfg: Config): (DataFrame, DataFrame) = m match {
+    case "stl" => runStl(series, labels, key, ts, value, cfg)
+    case "stl_exact" => runStl(series, labels, key, ts, value, cfg, exact = true)
+    case "kalman" => runKalman(series, labels, key, ts, value, cfg)
+    case "ar" => runAutoRegressor(series, labels, key, ts, value, cfg)
+    case "bsts" => runBsts(series, labels, key, ts, value, cfg)
+    case "gp" => runGp(series, labels, key, ts, value, cfg)
+    case "hybrid" => runHybrid(series, labels, key, ts, value, cfg)
+    case "hybrid3" => runHybridEnsemble(series, labels, key, ts, value, cfg)
+    case "enhanced_bsts" => runEnhancedBsts(series, labels, key, ts, value, cfg)
+  }
+
+  /** A metrics frame as leaderboard rows (aggregate_metrics.py's columns). */
+  private[bench] def leaderboardRows(metrics: DataFrame, model: Column,
+                                     key: String): DataFrame =
+    metrics.select(model.as("Model"), col(key).cast("string").as("Dataset"),
+      col("f1").as("Event_F1"), col("precision").as("Precision"),
+      col("recall").as("Recall"), col("fp_per_day").as("FP_per_Day"),
+      col("median_latency_minutes").as("Latency_Min"))
 
   /** E1: the final benchmark — every (model, series) combination, one
     * leaderboard ordered by event F1 (run_final_benchmark.py +
@@ -397,25 +431,8 @@ object Pipelines {
                           "hybrid")): DataFrame = {
     val runs = models.flatMap { m =>
       try {
-        val (_, metrics) = m match {
-          case "stl" => runStl(series, labels, key, ts, value, cfg)
-          case "kalman" => runKalman(series, labels, key, ts, value, cfg)
-          case "ar" => runAutoRegressor(series, labels, key, ts, value, cfg)
-          case "bsts" => runBsts(series, labels, key, ts, value, cfg)
-          case "gp" => runGp(series, labels, key, ts, value, cfg)
-          case "hybrid" => runHybrid(series, labels, key, ts, value, cfg)
-          case "hybrid3" =>
-            runHybridEnsemble(series, labels, key, ts, value, cfg)
-          case "enhanced_bsts" =>
-            runEnhancedBsts(series, labels, key, ts, value, cfg)
-        }
-        Some(metrics
-          .select(lit(m.toUpperCase).as("Model"),
-            col(key).cast("string").as("Dataset"),
-            col("f1").as("Event_F1"), col("precision").as("Precision"),
-            col("recall").as("Recall"),
-            col("fp_per_day").as("FP_per_Day"),
-            col("median_latency_minutes").as("Latency_Min")))
+        val (_, metrics) = runModel(m, series, labels, key, ts, value, cfg)
+        Some(leaderboardRows(metrics, lit(m.toUpperCase), key))
       } catch {
         case NonFatal(e) =>
           org.slf4j.LoggerFactory.getLogger(getClass)

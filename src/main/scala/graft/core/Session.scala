@@ -8,10 +8,11 @@ import org.apache.spark.sql.SparkSession
   * under the same confs.
   *
   * Base confs: `local[cpus]`, `cpus` shuffle partitions, UTC session
-  * time zone, UI off; then [[EngineTuning]] and [[SessionHygiene]]. Both
-  * are static-conf bundles applied on the builder. `getOrCreate()` hands
-  * back an already-running session unchanged, so the first caller in a
-  * JVM fixes the shape.
+  * time zone, UI off, the native functions of
+  * [[graft.functions.GraftExtensions]]; then [[EngineTuning]] and
+  * [[SessionHygiene]]. Both are static-conf bundles applied on the
+  * builder. `getOrCreate()` hands back an already-running session
+  * unchanged, so the first caller in a JVM fixes the shape.
   */
 object Session {
 
@@ -20,7 +21,8 @@ object Session {
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    "spark.sql.extensions" -> classOf[graft.functions.GraftExtensions].getName)
 
   /** Core count for mains: `SPARK_GRAFT_CPUS` when set, else every core
     * of the host. A value that is not a positive integer fails here,

@@ -1,6 +1,6 @@
 package graft.events
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -65,10 +65,6 @@ object Events {
         (col("end_rn") - col("start_rn") + 1).as("n_points")): _*)
   }
 
-  def eventize(df: DataFrame, series: String, ts: String, flag: String,
-               gap: Int): DataFrame =
-    eventize(df, Seq(series), ts, flag, gap, None)
-
   /** W8: persistence filter — zero out 1-runs shorter than p rows.
     * Stays fully windowed (no join back): run length is a count over the
     * islands key, broadcast to every member row by a second window.
@@ -92,10 +88,6 @@ object Events {
     if (rnCol.isEmpty) res.drop(rn) else res
   }
 
-  def persistFilter(df: DataFrame, series: String, ts: String, flag: String,
-                    p: Int, out: String): DataFrame =
-    persistFilter(df, Seq(series), ts, flag, p, out, None)
-
   /** J3: event-level confusion via interval-overlap joins.
     * Precision counts predicted events that overlap ANY true event
     * (pred-side TP); recall counts true events overlapped by ANY
@@ -106,28 +98,13 @@ object Events {
     */
   def eventLevelMetrics(pred: DataFrame, truth: DataFrame, keys: Seq[String],
                         eps: Double = 1e-9): DataFrame = {
-    val pk = keys.map(k => s"__p_$k")
-    val tk = keys.map(k => s"__t_$k")
-    val p = pred.select(keys.zip(pk).map { case (k, a) => col(k).as(a) } ++
-      Seq(col("start_rn").as("__ps"), col("end_rn").as("__pe")): _*)
-    val t = truth.select(keys.zip(tk).map { case (k, a) => col(k).as(a) } ++
-      Seq(col("start_rn").as("__ts"), col("end_rn").as("__te")): _*)
-    val keyEq = pk.zip(tk).map { case (a, b) => col(a) === col(b) }
-      .reduce(_ && _)
-    val overlap = col("__ps") <= col("__te") && col("__pe") >= col("__ts")
-    val predHit = p.join(t, keyEq && overlap, "left_semi")
-    val truthHit = t.join(p, keyEq && overlap, "left_semi")
-    val nPred = p.groupBy(pk.map(col): _*).agg(count(lit(1)).as("n_pred_events"))
-      .select(pk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("n_pred_events"): _*)
-    val nTrue = t.groupBy(tk.map(col): _*).agg(count(lit(1)).as("n_true_events"))
-      .select(tk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("n_true_events"): _*)
-    val tpP = predHit.groupBy(pk.map(col): _*).agg(count(lit(1)).as("tp"))
-      .select(pk.zip(keys).map { case (a, k) => col(a).as(k) } :+ col("tp"): _*)
-    val tpT = truthHit.groupBy(tk.map(col): _*).agg(count(lit(1)).as("tp_true"))
-      .select(tk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("tp_true"): _*)
+    val (p, t, on) = overlapSides(pred, truth, keys)
+    def countBy(df: DataFrame, side: String, out: String): DataFrame =
+      df.groupBy(unsided(side, keys): _*).agg(count(lit(1)).as(out))
+    val nPred = countBy(p, "p", "n_pred_events")
+    val nTrue = countBy(t, "t", "n_true_events")
+    val tpP = countBy(p.join(t, on, "left_semi"), "p", "tp")
+    val tpT = countBy(t.join(p, on, "left_semi"), "t", "tp_true")
     val allKeys = nPred.select(keys.map(col): _*)
       .unionByName(nTrue.select(keys.map(col): _*)).distinct()
     allKeys
@@ -145,28 +122,17 @@ object Events {
           (col("precision") + col("recall") + lit(eps)))
   }
 
-  def eventLevelMetrics(pred: DataFrame, truth: DataFrame,
-                        series: String): DataFrame =
-    eventLevelMetrics(pred, truth, Seq(series))
-
   /** J4: per true event, minutes from true start to the EARLIEST
     * overlapping predicted event's start (negative = early detection,
     * evaluate.py:189-198). One row per detected true event.
     */
   def detectionLatency(pred: DataFrame, truth: DataFrame, keys: Seq[String]
                       ): DataFrame = {
-    val pk = keys.map(k => s"__p_$k")
-    val p = pred.select(keys.zip(pk).map { case (k, a) => col(k).as(a) } ++
-      Seq(col("start_rn").as("__ps"), col("end_rn").as("__pe"),
-        col("start_ts").as("__pst")): _*)
-    val t = truth.select(keys.map(col) ++
-      Seq(col("start_rn").as("__ts"), col("end_rn").as("__te"),
-        col("start_ts").as("__tst")): _*)
-    val keyEq = keys.zip(pk).map { case (k, a) => col(k) === col(a) }
-      .reduce(_ && _)
-    val overlap = col("__ps") <= col("__te") && col("__pe") >= col("__ts")
-    t.join(p, keyEq && overlap, "inner")
-      .groupBy(keys.map(col) :+ col("__ts").as("true_start_rn") :+
+    val (p, t, on) = overlapSides(pred, truth, keys,
+      predExtra = Seq(col("start_ts").as("__pst")),
+      truthExtra = Seq(col("start_ts").as("__tst")))
+    t.join(p, on, "inner")
+      .groupBy(unsided("t", keys) :+ col("__ts").as("true_start_rn") :+
         col("__tst"): _*)
       .agg(min("__pst").as("first_pred_ts"))
       .withColumn("latency_minutes",
@@ -175,7 +141,30 @@ object Events {
       .withColumnRenamed("__tst", "true_start_ts")
   }
 
-  def detectionLatency(pred: DataFrame, truth: DataFrame,
-                       series: String): DataFrame =
-    detectionLatency(pred, truth, Seq(series))
+  /** The one interval-overlap rule of the event metrics, the latency
+    * and the business false positives: events overlap iff NOT
+    * (pred_end < true_start OR pred_start > true_end) (evaluate.py:78).
+    * Returns the pred side as (`__p_<key>`..., `__ps`, `__pe`, extras),
+    * the truth side as (`__t_<key>`..., `__ts`, `__te`, extras) and the
+    * join condition (same keys, overlapping [start_rn, end_rn]); each
+    * caller picks its own join type. */
+  private[graft] def overlapSides(pred: DataFrame, truth: DataFrame,
+                                  keys: Seq[String],
+                                  predExtra: Seq[Column] = Nil,
+                                  truthExtra: Seq[Column] = Nil)
+      : (DataFrame, DataFrame, Column) = {
+    def side(df: DataFrame, s: String, extra: Seq[Column]): DataFrame =
+      df.select(keys.map(k => col(k).as(s"__${s}_$k")) ++
+        Seq(col("start_rn").as(s"__${s}s"), col("end_rn").as(s"__${s}e")) ++
+        extra: _*)
+    val keyEq = keys.map(k => col(s"__p_$k") === col(s"__t_$k")).reduce(_ && _)
+    val overlap = col("__ps") <= col("__te") && col("__pe") >= col("__ts")
+    (side(pred, "p", predExtra), side(truth, "t", truthExtra),
+      keyEq && overlap)
+  }
+
+  /** The key columns of [[overlapSides]]' side `s` ("p" or "t") under
+    * their own names again. */
+  private[graft] def unsided(s: String, keys: Seq[String]): Seq[Column] =
+    keys.map(k => col(s"__${s}_$k").as(k))
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -34,12 +33,4 @@ object Bloom {
       "bloom_might_contain"),
     (children: Seq[Expression]) =>
       BloomFilterMightContain(children(0), children(1)))
-
-  /** Runtime registration (no extensions config needed). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      aggInfo._1, aggInfo._2, aggInfo._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      mightContainInfo._1, mightContainInfo._2, mightContainInfo._3)
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -153,9 +152,4 @@ object KmvAgg {
             s"got ${children.size}")
       KmvAgg(children(0), children(1))
     })
-
-  /** Runtime registration (no extensions config needed). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      info._1, info._2, info._3)
 }

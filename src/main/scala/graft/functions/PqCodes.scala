@@ -148,7 +148,6 @@ case class PqCodes(left: Expression, right: Expression)
 }
 
 object PqCodes {
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
@@ -157,9 +156,4 @@ object PqCodes {
     FunctionIdentifier("pq_codes"),
     new ExpressionInfo(classOf[PqCodes].getName, "pq_codes"),
     (children: Seq[Expression]) => PqCodes(children(0), children(1)))
-
-  /** Runtime registration (no extensions config needed). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      info._1, info._2, info._3)
 }

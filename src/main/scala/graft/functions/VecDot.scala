@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
@@ -110,15 +109,12 @@ object VecDot {
     FunctionIdentifier("vec_dot"),
     new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
     (children: Seq[Expression]) => VecDot(children(0), children(1)))
-
-  /** Runtime registration (no extensions config needed). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      info._1, info._2, info._3)
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` injection
-  * point for cluster deployments. */
+/** The one registration path of the engine's native functions:
+  * `core.Session` sets `spark.sql.extensions` to this class, so every
+  * session the engine builds resolves `vec_dot`, `pq_codes`,
+  * `bloom_agg`, `bloom_might_contain` and `kmv_minima` by name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(VecDot.info)

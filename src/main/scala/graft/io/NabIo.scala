@@ -10,7 +10,9 @@ import org.apache.spark.sql.types._
   * Reader semantics from `src/load_nab.py`:
   *  - S1: headered CSV with `timestamp,value`; if the header row lacks
   *    those names, fall back to the first two columns positionally and
-  *    rename them (`load_nab.py:26-31`); cast timestamp, sort ascending.
+  *    rename them (`load_nab.py:26-31`); cast timestamp. No sort: every
+  *    consumer orders by time in its own windows, and a global sort per
+  *    file only adds jobs.
   *  - S2: `combined_labels.json` is one JSON object mapping
   *    series key -> list of timestamp strings; exploded to rows, with the
   *    `data/` key-prefix normalization of `kalman_model.py:159`.
@@ -37,7 +39,6 @@ object NabIo {
       .withColumn("timestamp", to_timestamp(col("timestamp")))
       .withColumn("value", col("value").cast(DoubleType))
       .withColumn("series_id", lit(seriesId))
-      .orderBy("timestamp")
   }
 
   /** S2: labels JSON — `{series_key: [ts, ...]}` → (series_id, label_ts)

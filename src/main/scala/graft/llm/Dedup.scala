@@ -224,7 +224,6 @@ object Dedup {
                          text: String, n: Int = 3, minShared: Int = 2,
                          maxDocFreq: Int = 100,
                          numBits: Long = 1L << 19): DataFrame = {
-    graft.functions.Bloom.register(train.sparkSession)
     val benchSh = shingles(bench, id, text, n)
     val hot = benchSh.groupBy("shingle").agg(count(lit(1)).as("__bdf"))
       .filter(col("__bdf") <= maxDocFreq)

@@ -72,7 +72,6 @@ object Kmv {
   def sketchOnly(df: DataFrame, group: String, value: String,
                  k: Int): DataFrame = {
     require(k >= 2, s"k=$k must be >= 2")
-    graft.functions.KmvAgg.register(df.sparkSession)
     df.select(col(group),
         TextAnalysis.rollingHash(col(value).cast("string")).as("__h"))
       .groupBy(group)

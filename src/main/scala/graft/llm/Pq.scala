@@ -180,9 +180,6 @@ object Pq {
     * at corpus scale). */
   def pqEncode(model: PqModel, df: DataFrame, id: String,
                vec: String): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.catalog.functionExists("pq_codes"))
-      graft.functions.PqCodes.register(spark)
     unitized(df, id, vec)
       .select(col("__ord").as("corpus_id"),
         call_function("pq_codes", col("__dv"),
@@ -341,9 +338,6 @@ object Pq {
     val model =
       try PqModel(dim, m, ksub, fitBooks(sample, dim, m, ksub))
       finally { sample.unpersist(); () }
-    val spark = df.sparkSession
-    if (!spark.catalog.functionExists("pq_codes"))
-      graft.functions.PqCodes.register(spark)
     val codes = resid.select(col("__ord").as("corpus_id"), col("__cell"),
       call_function("pq_codes", col("__rv"),
         typedlit(model.codebooks)).as("__code"))
@@ -383,9 +377,6 @@ object Pq {
     * procedure as [[pqAppend]]/[[graft.llm.Similarity.ivfAppend]]. */
   def ivfPqAppend(index: IvfPqIndex, batch: DataFrame, id: String,
                   vec: String, path: String): Unit = {
-    val spark = batch.sparkSession
-    if (!spark.catalog.functionExists("pq_codes"))
-      graft.functions.PqCodes.register(spark)
     val km = DetKMeans.Model(index.centroids.map(_.toArray).toArray)
     unitized(batch, id, vec)
       .withColumn("__cell", km.assignExpr(col("__dv")))

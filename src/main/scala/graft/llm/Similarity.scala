@@ -28,9 +28,6 @@ object Similarity {
     * codegen; same summation order as the HOF form, so results are
     * bit-identical — VecDotSpec pins this). */
   def cosineNative(a: Column, b: Column): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    if (!spark.catalog.functionExists("vec_dot"))
-      graft.functions.VecDot.register(spark)
     def dot(x: Column, y: Column) = call_function("vec_dot", x, y)
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)) + lit(1e-12))
   }

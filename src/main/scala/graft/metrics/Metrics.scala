@@ -47,18 +47,9 @@ object Metrics {
     */
   def business(seriesDf: DataFrame, keys: Seq[String], ts: String,
                pred: DataFrame, truth: DataFrame): DataFrame = {
-    val pk = keys.map(k => s"__p_$k")
-    val p = pred.select(keys.zip(pk).map { case (k, a) => col(k).as(a) } ++
-      Seq(col("start_rn").as("__ps"), col("end_rn").as("__pe")): _*)
-    val t = truth.select(keys.map(col) ++
-      Seq(col("start_rn").as("__ts"), col("end_rn").as("__te")): _*)
-    val keyEq = keys.zip(pk).map { case (k, a) => col(k) === col(a) }
-      .reduce(_ && _)
-    val overlap = col("__ps") <= col("__te") && col("__pe") >= col("__ts")
-    val fpEvents = p.join(t, keyEq && overlap, "left_anti")
-      .groupBy(pk.map(col): _*).agg(count(lit(1)).as("fp_count"))
-      .select(pk.zip(keys).map { case (a, k) => col(a).as(k) } :+
-        col("fp_count"): _*)
+    val (p, t, on) = Events.overlapSides(pred, truth, keys)
+    val fpEvents = p.join(t, on, "left_anti")
+      .groupBy(Events.unsided("p", keys): _*).agg(count(lit(1)).as("fp_count"))
     val span = seriesDf.groupBy(keys.map(col): _*)
       .agg(((unix_micros(max(col(ts))) - unix_micros(min(col(ts))))
         / lit(86400e6)).as("duration_days"))

@@ -49,12 +49,8 @@ object DetKMeans {
 
   case class Model(centroids: Array[Array[Double]]) {
 
-    private def vecDot(a: Column, b: Column): Column = {
-      val spark = org.apache.spark.sql.SparkSession.active
-      if (!spark.catalog.functionExists("vec_dot"))
-        graft.functions.VecDot.register(spark)
+    private def vecDot(a: Column, b: Column): Column =
       call_function("vec_dot", a, b)
-    }
 
     /** Nearest-centroid index for a (double-array) vector column. */
     def assignExpr(vec: Column): Column = {

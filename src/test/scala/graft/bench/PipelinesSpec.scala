@@ -139,7 +139,8 @@ class PipelinesSpec extends SparkSpec {
 
   /** A pipeline given a time column named `timestamp` must give the
     * metrics it gives with `ts`: the per-series models emit a fixed `ts`
-    * column, and the pipelines join it to the caller's time column. */
+    * column, and the pipelines join it to the caller's time column. The
+    * `ts` run's metrics must also equal a recomputation from its flags. */
   private def sameMetricsUnderTimestamp(
       run: (DataFrame, DataFrame, String) => (DataFrame, DataFrame)): Unit = {
     val (series, labels) = fixture
@@ -147,7 +148,9 @@ class PipelinesSpec extends SparkSpec {
       val cols = m.columns.toSeq.sorted
       (cols, m.select(cols.map(col): _*).orderBy("series_id").collect().toSeq)
     }
-    val byTs = rows(run(series, labels, "ts")._2)
+    val onTs = run(series, labels, "ts")
+    assertRecomputed(onTs)
+    val byTs = rows(onTs._2)
     val byTimestamp = rows(run(series.withColumnRenamed("ts", "timestamp"),
       labels, "timestamp")._2)
     assert(byTs._2.nonEmpty)
@@ -202,5 +205,96 @@ class PipelinesSpec extends SparkSpec {
     sameMetricsUnderTimestamp((s, l, ts) =>
       Pipelines.runHybridEnsemble(s, l, "series_id", ts, "value", cfg24,
         seqLen = 12))
+  }
+
+  /** evaluate.py's eventization as perfbench/checks.py states it: runs of
+    * 1s over the row ordinal, a flag merged into the previous event iff
+    * its ordinal minus that event's end is at most gap + 1. */
+  private def events(flags: Seq[Int], gap: Int): Seq[(Int, Int)] =
+    flags.zipWithIndex.filter(_._1 == 1).map(_._2)
+      .foldLeft(Vector.empty[(Int, Int)]) {
+        case (acc :+ ((s, e)), i) if i - e <= gap + 1 => acc :+ ((s, i))
+        case (acc, i) => acc :+ ((i, i))
+      }
+
+  /** Recomputes each series' event confusion from the persisted
+    * `detected` and `is_anomaly` flags (any-overlap match, 1e-9 eps) and
+    * asserts it equals the pipeline's metrics row; every series of the
+    * predictions has exactly one row. */
+  private def assertRecomputed(pm: (DataFrame, DataFrame)): Unit = {
+    val (pred, metrics) = pm
+    val key = "series_id"
+    val eps = 1e-9
+    val flags = pred.select(col(key).cast("string"), col("ts"),
+        col("detected"), col("is_anomaly"))
+      .collect().groupBy(_.getString(0)).map { case (k, rs) =>
+        val sorted = rs.sortBy(_.getTimestamp(1).getTime).toSeq
+        k -> (sorted.map(_.getInt(2)), sorted.map(_.getInt(3)))
+      }
+    val rows = metrics.collect()
+      .map(r => r.getAs[Any](key).toString -> r).toMap
+    assert(rows.size === metrics.count(), "one metrics row per series")
+    assert(flags.keySet.subsetOf(rows.keySet),
+      s"series without a metrics row: ${flags.keySet -- rows.keySet}")
+    flags.foreach { case (k, (det, truth)) =>
+      val p = events(det, cfg24.gap)
+      val t = events(truth, cfg24.gap)
+      def hit(a: (Int, Int), b: (Int, Int)) = a._1 <= b._2 && a._2 >= b._1
+      val tp = p.count(e => t.exists(hit(e, _)))
+      val tpTrue = t.count(e => p.exists(hit(_, e)))
+      val precision = tp / (p.size + eps)
+      val recall = tpTrue / (t.size + eps)
+      val f1 = 2 * precision * recall / (precision + recall + eps)
+      val r = rows(k)
+      val got = Seq("tp", "fp", "fn").map(c => r.getAs[Long](c))
+      assert(got === Seq[Long](tp, p.size - tp, t.size - tpTrue),
+        s"$k: tp/fp/fn")
+      Seq("precision" -> precision, "recall" -> recall, "f1" -> f1)
+        .foreach { case (c, want) =>
+          assert(r.getAs[Double](c) === want, s"$k: $c")
+        }
+    }
+  }
+
+  test("detectAndScore's metrics equal a recomputation for every sigma source") {
+    // a residual frame with a Validation split, so the tune and Test
+    // truth differ
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val resid = (for { sid <- Seq("a", "b"); i <- 0 until 200 } yield {
+      val r = rng.nextGaussian() + (if (i >= 170 && i < 174) 9.0 else 0.0)
+      (sid, java.sql.Timestamp.valueOf(
+        f"2024-01-0${1 + i / 96}%d ${(i / 4) % 24}%02d:${(i % 4) * 15}%02d:00"),
+        r, 1.0 + 0.1 * rng.nextDouble(),
+        if (i < 100) "Train" else if (i < 150) "Validation" else "Test",
+        if ((i >= 170 && i < 174) || (i >= 120 && i < 123)) 1 else 0)
+    }).toDF("series_id", "ts", "resid", "pred_std", "split", "is_anomaly")
+    for ((src, tune) <- Seq("rolling" -> "Test",
+        "rolling_centered" -> "Validation", "pred_std" -> "Validation"))
+      assertRecomputed(
+        Pipelines.detectAndScore(resid, "series_id", "ts", cfg24,
+          tuneSplit = tune, sigmaSource = src))
+  }
+
+  test("a hybrid series with no event on either side gets a zeroed row") {
+    import spark.implicits._
+    val (series, labels) = fixture
+    // a constant series with no label: both member scores are 0, so no
+    // k flags it and it has no true event
+    val flat = (0 until 400).map { i =>
+      ("c", java.sql.Timestamp.valueOf(
+        f"2024-01-${1 + i / 96}%02d ${(i / 4) % 24}%02d:${(i % 4) * 15}%02d:00"),
+        50.0)
+    }.toDF("series_id", "ts", "value")
+    val (pred, metrics) = Pipelines.runHybrid(series.unionByName(flat),
+      labels, "series_id", "ts", "value", cfg24)
+    assert(pred.filter(col("series_id") === "c" && col("detected") === 1)
+      .count() === 0L)
+    val c = metrics.filter(col("series_id") === "c").collect()
+    assert(c.length === 1, "the event-less series must keep its row")
+    Seq("tp", "fp", "fn", "n_pred_events", "n_true_events", "pt_tp")
+      .foreach(f => assert(c.head.getAs[Long](f) === 0L, f))
+    assert(c.head.getAs[Double]("f1") === 0.0)
+    assertRecomputed((pred, metrics))
   }
 }

@@ -60,6 +60,19 @@ class SessionHygieneSpec extends AnyFunSuite {
     assert(Session.base(2)("spark.master") == "local[2]")
   }
 
+  test("Session(2) resolves every native function with no registration call") {
+    // GraftExtensions arrives through `spark.sql.extensions`, so a fresh
+    // sibling session (its own function registry) resolves all five
+    val fresh = Session(2).newSession()
+    Seq("vec_dot", "pq_codes", "bloom_agg", "bloom_might_contain",
+      "kmv_minima").foreach { f =>
+      assert(fresh.catalog.functionExists(f), s"$f does not resolve")
+    }
+    assert(fresh.sql(
+      "SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D))").head()
+      .getDouble(0) == 11.0)
+  }
+
   test("the coalescing floor the engine no longer sets is Spark's 1 MiB") {
     // EngineTuning dropped its minPartitionSize entry because "1m" was
     // the stock value; a Spark upgrade that moves the default shows here

@@ -10,7 +10,6 @@ class VecDotSpec extends SparkSpec {
 
   test("vec_dot matches the HOF dot product on float arrays") {
     import spark.implicits._
-    VecDot.register(spark)
     val df = Seq(
       (1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (2L, Array(0.5f, -1.5f), Array(2.0f, 2.0f))
@@ -57,7 +56,6 @@ class VecDotSpec extends SparkSpec {
 
   test("vec_dot agrees with Similarity.cosine on real embeddings shape") {
     import spark.implicits._
-    VecDot.register(spark)
     val rng = new scala.util.Random(1)
     val rows = (0 until 20).map(i =>
       (i.toLong, Array.fill(64)(rng.nextFloat()),
@@ -76,7 +74,6 @@ class VecDotSpec extends SparkSpec {
 
   test("vec_dot runs natively on tinyint arrays (quantized coarse stage)") {
     import spark.implicits._
-    VecDot.register(spark)
     // Seq[Byte], not Array[Byte]: the latter encodes as BINARY
     val df = Seq(
       (1L, Seq[Byte](1, -2, 3), Seq[Byte](4, 5, -6)),

@@ -19,6 +19,24 @@ class GoldenSpec extends SparkSpec {
   private val refRoot = "/root/reference/results"
   private def available: Boolean = new java.io.File(refRoot).isDirectory
 
+  // sbt still says "All tests passed" when every case cancels, so count
+  // the cancels and name the missing artifacts in one line of the output
+  private val canceled = new java.util.concurrent.atomic.AtomicInteger
+
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val outcome = super.withFixture(test)
+    if (outcome.isCanceled) canceled.incrementAndGet()
+    outcome
+  }
+
+  override def afterAll(): Unit = {
+    if (canceled.get > 0)
+      println(s"GoldenSpec: ${canceled.get} of ${testNames.size} tests " +
+        s"CANCELED, reference artifacts missing at $refRoot: fidelity to " +
+        "the reference's saved outputs is NOT checked by this run")
+    super.afterAll()
+  }
+
   private def loadPredictions(dir: String, testOnly: Boolean): DataFrame = {
     val df = spark.read.option("header", "true").csv(s"$dir/predictions.csv")
       .withColumn("ts", to_timestamp(col("timestamp")))

@@ -444,8 +444,6 @@ class AnnRecallSpec extends SparkSpec {
       // halves with this model yields)
       val km = graft.models.DetKMeans.Model(
         idx.centroids.map(_.toArray).toArray)
-      if (!spark.catalog.functionExists("pq_codes"))
-        graft.functions.PqCodes.register(spark)
       val oneShotCodes = Pq.unitized(emb, "vec_id", "embedding")
         .withColumn("__cell", km.assignExpr(col("__dv")))
         .withColumn("__rv", zip_with(col("__dv"),
