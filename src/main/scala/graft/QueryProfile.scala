@@ -19,7 +19,8 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   *    broadcast nested-loop joins;
   *  - every job of the invocation (iterative queries do their work in
   *    driver-action jobs during DataFrame construction, invisible to
-  *    plan metrics) with its wall time and task count;
+  *    plan metrics) with its wall time, task count, label and call
+  *    site, then one line per call site with its job count;
   *  - the executed plan with its non-zero operator metrics (rows out,
   *    operator times, shuffle bytes), the local substitute for the UI's
   *    SQL tab.
@@ -35,6 +36,17 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * `SparkEntry.entry`. Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
   */
 object QueryProfile {
+
+  /** One job of a profiled call: its label is the job description
+    * (`"<op>:<phase>:<iter>"` in the graph loops), its call site the
+    * last stage's name. */
+  private case class Job(id: Int, start: Long, end: Long, tasks: Int,
+                         callSite: String, label: String) {
+    /** Where the job was started: the label without its iteration,
+      * else the call site. */
+    def site: String =
+      if (label.isEmpty) callSite else label.replaceAll(":[0-9]+$", "")
+  }
 
   private def build(name: String): (org.apache.spark.sql.SparkSession, String) => DataFrame =
     if (name == "entry") (spark, _) => SparkEntry.entry(spark)
@@ -81,18 +93,18 @@ object QueryProfile {
     val spark = graft.core.Session()
     spark.sparkContext.setLogLevel("ERROR")
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
-    val jobLog =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, Int, String)]()
-    val starts =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
+    val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.put(js.jobId, (js.time,
+        starts.put(js.jobId, Job(js.jobId, js.time, 0L,
+          js.stageInfos.map(_.numTasks).sum,
           js.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse(""),
-          js.stageInfos.map(_.numTasks).sum))
+          Option(js.properties).flatMap(p =>
+            Option(p.getProperty("spark.job.description"))).getOrElse("")))
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val s = starts.remove(je.jobId)
-        if (s != null) jobLog.add((je.jobId, s._1, je.time, s._3, s._2))
+        if (s != null) jobLog.add(s.copy(end = je.time))
       }
     }
     names.foreach { name =>
@@ -120,12 +132,15 @@ object QueryProfile {
       println(f"== $name%s: $sec%.2f s warm (build $tBuild%.2f s) rows=${rows.sum}")
       println("  plan: " + planCounts(qe.executedPlan)
         .map { case (k, v) => s"$k=$v" }.mkString(" "))
-      val jl = jobLog.toArray(Array.empty[(Int, Long, Long, Int, String)])
-        .sortBy(_._1)
+      val jl = jobLog.toArray(Array.empty[Job]).sortBy(_.id)
       println(s"  jobs: ${jl.length}, " +
-        f"sum ${jl.map(j => j._3 - j._2).sum / 1e3}%.2f s")
-      jl.filter(j => j._3 - j._2 >= 50).foreach { case (id, s, e, nt, nm) =>
-        println(f"  job $id%4d ${(e - s) / 1e3}%6.2f s tasks=$nt%4d  $nm%s")
+        f"sum ${jl.map(j => j.end - j.start).sum / 1e3}%.2f s")
+      jl.foreach { j =>
+        println(f"  job ${j.id}%4d ${(j.end - j.start) / 1e3}%6.2f s " +
+          f"tasks=${j.tasks}%4d  ${j.label}%s  ${j.callSite}%s")
+      }
+      jl.groupBy(_.site).toSeq.sortBy(-_._2.length).foreach { case (k, js) =>
+        println(f"  ${js.length}%4d jobs at $k%s")
       }
       def dump(p: SparkPlan, depth: Int): Unit = {
         val m = p.metrics.toSeq

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** Community detection by synchronous MIN-LABEL propagation ("hash-min"
   * LPA — the deterministic variant of Raghavan 2007's label
   * propagation, and the per-round step of the Rastogi 2013 hash-min
@@ -23,14 +25,15 @@ import org.apache.spark.sql.functions._
   * commutative, partition-order-independent: no float-fold convention
   * needed anywhere.
   *
-  * Distribution shape (the r15 PageRank loop discipline): the
+  * Distribution shape (the [[PageRank]] loop discipline): the
   * symmetric adjacency is checkpointed ONCE, hash-partitioned on src,
-  * so per round only the nodes-sized label state shuffles into the
-  * message join; messages take ONE hash(dst) exchange with map-side
-  * partial min (a real combiner — unlike the ordered float folds, min
-  * collapses on the map side); the label update is a nodes-sized
-  * self-join. Round state rides [[graft.core.Checkpoints.fresh]] so
-  * lineage and carried stats never compound.
+  * and the label state keyed on id, both through
+  * [[graft.core.Checkpoints.fresh]], so the message join and the label
+  * update are co-partitioned and a round's one exchange is the
+  * hash(dst) messages, with map-side partial min (a real combiner —
+  * unlike the ordered float folds, min collapses on the map side).
+  * Round state rides the same checkpoint, so lineage and carried stats
+  * never compound.
   */
 object Communities {
 
@@ -46,66 +49,80 @@ object Communities {
     * components (CommunitiesSpec pins both equalities). The default
     * stays fixed-R so bounded-radius reads are reproducible.
     *
-    * The output is materialized (eager final checkpoint) before the
-    * loop's cached round state is released, so repeated invocations in
-    * one session leave nothing in the CacheManager — the edge-sized
-    * `adj` checkpoint is RDD-cached only (no CacheManager entry) and
-    * is reclaimed by the ContextCleaner once the invocation's frames
-    * go out of scope. */
+    * The output is materialized (eager final checkpoint; in fixed-R
+    * mode the last round is that checkpoint) before every checkpoint
+    * of the call is released, so repeated invocations in one session
+    * leave no cached blocks behind. */
   def minLabelPropagation(nodes: DataFrame, id: String,
                           edges: DataFrame, src: String, dst: String,
                           rounds: Int,
                           earlyStop: Boolean = false): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be >= 1")
-    val nd = nodes.select(col(id).cast("long").as("__id")).distinct()
-    val und = edges.select(col(src).cast("long").as("__a"),
-        col(dst).cast("long").as("__b"))
-      .filter(col("__a") =!= col("__b") &&
-        col("__a").isNotNull && col("__b").isNotNull)
-      .select(least(col("__a"), col("__b")).as("__u"),
-        greatest(col("__a"), col("__b")).as("__v"))
-      .distinct()
-    val adj = und.select(col("__u").as("__src"), col("__v").as("__dst"))
-      .unionAll(und.select(col("__v").as("__src"),
-        col("__u").as("__dst")))
-      .repartition(col("__src")).localCheckpoint()
+    val spark = nodes.sparkSession
+    def label[T](phase: String, i: Int)(body: => T): T =
+      Checkpoints.labeled(spark, s"communities:$phase:$i")(body)
+    // the symmetric closure, hash-partitioned on __src: both directions
+    // of each edge in one pass, one exchange, the distinct after it
+    // (hash(__src) clusters every (__src, __dst) key)
+    val adj = label("edges", 0)(Checkpoints.fresh(
+      edges.select(col(src).cast("long").as("__a"),
+          col(dst).cast("long").as("__b"))
+        .filter(col("__a") =!= col("__b") &&
+          col("__a").isNotNull && col("__b").isNotNull)
+        .select(explode(array(
+          struct(col("__a").as("__src"), col("__b").as("__dst")),
+          struct(col("__b").as("__src"), col("__a").as("__dst"))))
+          .as("__e"))
+        .select("__e.*")
+        .repartition(col("__src")).distinct(), "__src"))
     // round state carries (__id, __lbl, __chg): __chg marks whether
     // THIS round lowered the label, so convergence is a filter over
-    // the cached state, not a self-join against the previous round
-    var state = nd.select(col("__id"), col("__id").as("__lbl"),
-        lit(true).as("__chg"))
-      .repartition(col("__id")).localCheckpoint()
-    var t = 0
-    var converged = false
-    while (t < rounds && !converged) {
-      val labels = state.select("__id", "__lbl")
+    // the checkpointed state, not a self-join against the previous round
+    var state = label("nodes", 0)(Checkpoints.fresh(
+      nodes.select(col(id).cast("long").as("__id")).distinct()
+        .select(col("__id"), col("__id").as("__lbl"), lit(true).as("__chg")),
+      "__id"))
+    def step(cur: DataFrame): DataFrame = {
+      val labels = cur.select("__id", "__lbl")
       // groupBy DIRECTLY (no explicit repartition): min partially
-      // aggregates map-side, so the one hash(dst) exchange moves
-      // per-partition minima, not raw messages — the opposite call
-      // from the PageRank fold, whose collect_list has no map-side
-      // reduction to preserve
+      // aggregates map-side, so the round's one hash(dst) exchange
+      // moves per-partition minima, not raw messages — the opposite
+      // call from the PageRank fold, whose ordered fold has no
+      // map-side reduction to preserve
       val msgs = adj
         .join(labels.hint("shuffle_hash"),
           adj("__src") === labels("__id"))
         .select(col("__dst"), col("__lbl").as("__in"))
         .groupBy("__dst").agg(min("__in").as("__nm"))
+      labels.join(msgs.hint("shuffle_hash"),
+          labels("__id") === msgs("__dst"), "left")
+        .select(col("__id"),
+          least(col("__lbl"), coalesce(col("__nm"), col("__lbl")))
+            .as("__lbl"),
+          (coalesce(col("__nm"), col("__lbl")) < col("__lbl"))
+            .as("__chg"))
+    }
+    var t = 0
+    var converged = false
+    while (t < rounds - 1 && !converged) {
       val prev = state
-      state = graft.core.Checkpoints.fresh(
-        labels.join(msgs.hint("shuffle_hash"),
-            labels("__id") === msgs("__dst"), "left")
-          .select(col("__id"),
-            least(col("__lbl"), coalesce(col("__nm"), col("__lbl")))
-              .as("__lbl"),
-            (coalesce(col("__nm"), col("__lbl")) < col("__lbl"))
-              .as("__chg")))
-      graft.core.Checkpoints.release(prev)
-      if (earlyStop) converged = state.filter(col("__chg")).isEmpty
+      state = label("round", t)(Checkpoints.fresh(step(state), "__id"))
+      Checkpoints.release(prev)
+      if (earlyStop)
+        converged = label("converged", t)(
+          Checkpoints.isEmpty(state.filter(col("__chg"))))
       t += 1
     }
-    val out = state
-      .select(col("__id").as(id), col("__lbl").as("community"))
-      .localCheckpoint()
-    graft.core.Checkpoints.release(state)
+    // the last round, unless an early stop made it unnecessary, is
+    // checkpointed as the output itself; then every checkpoint of this
+    // call is released
+    def output(df: DataFrame): DataFrame =
+      df.select(col("__id").as(id), col("__lbl").as("community"))
+        .localCheckpoint()
+    val out =
+      if (converged) label("output", 0)(output(state))
+      else label("round", t)(output(step(state)))
+    Seq(state, adj).foreach(Checkpoints.release)
     out
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** HITS — hubs & authorities (Kleinberg, JACM 1999) as a DataFrame
   * power iteration: the query-independent companion to PageRank for
   * link-graph curation (an authority is pointed to by good hubs; a hub
@@ -53,30 +55,30 @@ object Hits {
            saltBuckets: Int = 64): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
     require(saltBuckets >= 1, s"saltBuckets=$saltBuckets must be >= 1")
-    val nd = nodes.select(col(id).cast("long").as("__id")).distinct()
-      .localCheckpoint()
+    val spark = nodes.sparkSession
+    def label[T](phase: String, i: Int)(body: => T): T =
+      Checkpoints.labeled(spark, s"hits:$phase:$i")(body)
+    val nd = label("nodes", 0)(Checkpoints.fresh(
+      nodes.select(col(id).cast("long").as("__id")).distinct(), "__id"))
     // TWO checkpointed edge copies, hash-partitioned on the pass key
     // (the relational analogue of keeping src- and dst-sorted
     // adjacency lists): the auth pass joins on __src, the hub pass on
-    // __dst, and with localCheckpoint preserving the physical
-    // partitioning NEITHER pass ever re-shuffles the edges — only the
-    // nodes-sized score relation moves (r15 PageRank loop discipline).
-    // eD derives from the materialized eS, so the distinct runs once;
-    // its checkpoint is LAZY (it materializes inside the first hub
-    // pass instead of as its own job — the r16 q_hits adjudication
-    // found the r15 restructure's fixed per-invocation barriers were
-    // the regression, not the exchanges), and its columns are
+    // __dst, so NEITHER pass ever re-shuffles the edges — only its
+    // messages move (one exchange per pass). eS dedups after its
+    // __src exchange (hash(__src) clusters every (__src, __dst) key),
+    // so it shuffles once; eD derives from the materialized eS, so the
+    // distinct runs once; its columns are
     // re-aliased so a plan may reference BOTH copies without exprId
-    // conflicts (localCheckpoint preserves output attribute ids).
-    val eS = edges.select(col(src).cast("long").as("__src"),
-        col(dst).cast("long").as("__dst"))
-      .filter(col("__src") =!= col("__dst") &&
-        col("__src").isNotNull && col("__dst").isNotNull)
-      .distinct()
-      .repartition(col("__src"))
-      .localCheckpoint()
-    val eD = eS.select(col("__src").as("__src"), col("__dst").as("__dst"))
-      .repartition(col("__dst")).localCheckpoint(false)
+    // conflicts (a checkpoint keeps its output attribute ids).
+    val eS = label("edges_src", 0)(Checkpoints.fresh(
+      edges.select(col(src).cast("long").as("__src"),
+          col(dst).cast("long").as("__dst"))
+        .filter(col("__src") =!= col("__dst") &&
+          col("__src").isNotNull && col("__dst").isNotNull)
+        .repartition(col("__src")).distinct(), "__src"))
+    val eD = label("edges_dst", 0)(Checkpoints.fresh(
+      eS.select(col("__src").as("__src"), col("__dst").as("__dst")),
+      "__dst"))
     // overflow guard for the no-per-pass-normalization design:
     // unnormalized scores grow at most like (max degree)^(2·iters)
     // (each pass multiplies the max score by at most the max in/out
@@ -87,21 +89,23 @@ object Hits {
     // already-materialized eS (r15 ran two separate jobs here).
     // Callers hitting this need per-pass rescaling semantics, which
     // would change the float contract — fail loudly instead.
-    val maxDeg = eS.select(col("__src").as("__k"), lit(0).as("__d"))
-      .unionAll(eS.select(col("__dst").as("__k"), lit(1).as("__d")))
-      .groupBy("__k", "__d").count()
-      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+    val maxDeg = label("max_degree", 0)(
+      eS.select(col("__src").as("__k"), lit(0).as("__d"))
+        .unionAll(eS.select(col("__dst").as("__k"), lit(1).as("__d")))
+        .groupBy("__k", "__d").count()
+        .agg(coalesce(max("count"), lit(0L))).head().getLong(0))
     require(2.0 * iters * math.log(math.max(maxDeg, 2L).toDouble) < 600.0,
       s"iters=$iters with max degree $maxDeg can overflow the " +
         "unnormalized double scores (bound: 2*iters*ln(maxDeg) < 600); " +
         "reduce iters")
     // one two-level-fold pass: scores keyed `fromCol` fold into
     // `toCol` groups in from-order (only nonzero-score nodes present).
-    // The plan is LAZY here — the caller decides where the stats-safe
-    // checkpoint barrier lands (core/Checkpoints.scala).
-    // the explicit toCol repartition feeds BOTH fold levels (hash(to)
-    // satisfies the (to, salt) and (to) groupings — one exchange, not
-    // two); shuffle_hash keeps the edges side unsorted
+    // The plan is LAZY here — the caller decides where the checkpoint
+    // barrier lands. The explicit toCol repartition is the pass's one
+    // exchange and feeds BOTH fold levels (hash(to) satisfies the
+    // (to, salt) and (to) groupings); its output, renamed to __id,
+    // stays keyed on __id, so the next pass joins it without an
+    // exchange. shuffle_hash keeps the edges side unsorted
     def pass(scores: DataFrame, eDir: DataFrame, fromCol: String,
              toCol: String): DataFrame =
       eDir.join(scores.hint("shuffle_hash"),
@@ -115,8 +119,9 @@ object Hits {
         .groupBy(col(toCol))
         .agg(orderedSum(col("__sb"), col("__ps")).as("__score"))
         .withColumnRenamed(toCol, "__id")
+    // the initial hubs are a projection of the __id-keyed node set,
+    // not a checkpoint of their own
     var hub = nd.select(col("__id"), lit(1.0).as("__score"))
-      .localCheckpoint()
     // FUSED iteration (r16): the intermediate authorities of a
     // non-final iteration are consumed exactly once — by the same
     // iteration's hub pass — so the auth pass inlines into the hub
@@ -139,41 +144,42 @@ object Hits {
         cur = pass(pass(cur, eS, "__src", "__dst"), eD, "__dst", "__src")
         done = 2
       }
-      hub = graft.core.Checkpoints.fresh(cur)
-      graft.core.Checkpoints.release(prevHub)
+      hub = label("round", t)(Checkpoints.fresh(cur, "__id"))
+      Checkpoints.release(prevHub)
       t += done
     }
     // final iteration: the auth pass is needed for the output, so it
     // gets its own barrier before the last hub pass
-    val auth = graft.core.Checkpoints.fresh(
-      pass(hub, eS, "__src", "__dst"))
+    val auth = label("auth", iters - 1)(Checkpoints.fresh(
+      pass(hub, eS, "__src", "__dst"), "__id"))
     val lastHub = hub
-    hub = graft.core.Checkpoints.fresh(
-      pass(auth, eD, "__dst", "__src"))
-    graft.core.Checkpoints.release(lastHub)
+    hub = label("hub", iters - 1)(Checkpoints.fresh(
+      pass(auth, eD, "__dst", "__src"), "__id"))
+    Checkpoints.release(lastHub)
     // end normalization over the full node set, zero-coalesced — both
     // sides in ONE pass (one join chain + one two-max aggregate, where
-    // r15 ran the chain per side and joined the results)
+    // r15 ran the chain per side and joined the results). All three are
+    // checkpoints keyed on __id, so the shuffle_hash joins need no
+    // exchange where broadcasts would each add a job.
     val full = nd
-      .join(auth.withColumnRenamed("__score", "__as"), Seq("__id"), "left")
-      .join(hub.withColumnRenamed("__score", "__hs"), Seq("__id"), "left")
+      .join(auth.withColumnRenamed("__score", "__as").hint("shuffle_hash"),
+        Seq("__id"), "left")
+      .join(hub.withColumnRenamed("__score", "__hs").hint("shuffle_hash"),
+        Seq("__id"), "left")
       .select(col("__id"),
         coalesce(col("__as"), lit(0.0)).as("__ra"),
         coalesce(col("__hs"), lit(0.0)).as("__rh"))
     val mx = full.agg(max("__ra").as("__ma"), max("__rh").as("__mh"))
-    // materialize the result, then release the final round's cached
-    // scores — repeated invocations in one session leave no
-    // CacheManager entries behind (eS/eD are RDD-cached only and
-    // reclaimed by the ContextCleaner on scope exit)
-    val out = full.crossJoin(broadcast(mx))
+    // materialize the result, then release every checkpoint of this
+    // call
+    val out = label("output", 0)(full.crossJoin(broadcast(mx))
       .select(col("__id").as(id),
         when(col("__ma") > 0.0, col("__ra") / col("__ma"))
           .otherwise(lit(0.0)).as("authority"),
         when(col("__mh") > 0.0, col("__rh") / col("__mh"))
           .otherwise(lit(0.0)).as("hub"))
-      .localCheckpoint()
-    graft.core.Checkpoints.release(auth)
-    graft.core.Checkpoints.release(hub)
+      .localCheckpoint())
+    Seq(auth, hub, eD, eS, nd).foreach(Checkpoints.release)
     out
   }
 }

@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** PageRank (Brin & Page 1998) as a DataFrame power iteration — the
   * link-graph authority score a crawl pipeline uses to prioritize its
   * frontier and weight domain quality (the "link graph" stage of
@@ -18,20 +20,22 @@ import org.apache.spark.sql.functions._
   * dangling-free graphs).
   *
   * Distribution shape: the edge relation is checkpointed ONCE,
-  * already hash-partitioned on src (localCheckpoint preserves the
-  * physical partitioning — the in-engine analogue of a src-bucketed
-  * edge table), and the N-row state relation carries (rank, out-mass)
-  * per node. Per iteration: one co-partitioned equi-join (only the
-  * nodes-sized state shuffles; the edges never move again), ONE
-  * edges-sized exchange on dst feeding BOTH levels of the contribution
-  * fold (hash(dst) satisfies the (dst, salt) and (dst) groupings), and
-  * a co-partitioned update join against the once-checkpointed
-  * hash(id)-partitioned node state — the Pregel message-passing shape
-  * with the minimum movable volume. Each step's rank relation is
-  * checkpointed to break the 10-deep lineage (without this the plan
-  * doubles per iteration). At 100 TB scale the same loop holds with
-  * the edge table bucketed by src; the rank table is nodes-sized,
-  * orders of magnitude smaller than edges.
+  * hash-partitioned on src, and the N-row node state (seed flag,
+  * out-mass) once, hash-partitioned on id, both through
+  * [[graft.core.Checkpoints.fresh]], which keeps that partitioning on
+  * the checkpoint (a plain `localCheckpoint` under AQE does not). Per
+  * iteration the contribution join of edges and ranks and the update
+  * join of node state and contributions are co-partitioned, so the one
+  * exchange is the edges-sized messages keyed on dst, which feeds BOTH
+  * levels of the contribution fold (hash(dst) satisfies the (dst, salt)
+  * and (dst) groupings) — the Pregel message-passing shape with the
+  * minimum movable volume (GraphPlanShapeSpec pins it). Each step's
+  * rank relation is checkpointed the same way, keyed on id, to break
+  * the 10-deep lineage (without this the plan doubles per iteration).
+  * Setup is three actions: the edges, the node state, and one
+  * aggregate over the node state for N and |S|. At 100 TB scale the
+  * same loop holds with the edge table bucketed by src; the rank table
+  * is nodes-sized, orders of magnitude smaller than edges.
   *
   * Personalization + weights (the crawl-frontier form topic-focused
   * curation actually runs): `resetTo` redirects the teleport mass to
@@ -86,28 +90,9 @@ object PageRank {
     require(damping > 0.0 && damping < 1.0,
       s"damping=$damping not in (0,1)")
     require(saltBuckets >= 1, s"saltBuckets=$saltBuckets must be >= 1")
-    val ndPlain = nodes.select(col(id).cast("long").as("__id"))
-      .distinct()
-    // nd carries the per-node teleport mass __p: uniform 1/N, or
-    // 1/|S| on the seed set and 0 elsewhere (personalized)
-    val nd = (resetTo match {
-      case None => ndPlain
-      case Some(seedsDf) =>
-        val seedCol = seedsDf.columns.head
-        val seeds = seedsDf
-          .select(col(seedCol).cast("long").as("__id")).distinct()
-          .join(ndPlain, Seq("__id"))
-          .withColumn("__seed", lit(1))
-          .localCheckpoint()
-        val sCount = seeds.count()
-        require(sCount >= 1,
-          "resetTo must intersect the node set in at least one id")
-        ndPlain.join(seeds, Seq("__id"), "left")
-          .withColumn("__p",
-            when(col("__seed").isNotNull,
-              lit(1.0) / lit(sCount)).otherwise(lit(0.0)))
-          .drop("__seed")
-    }).localCheckpoint()
+    val spark = nodes.sparkSession
+    def label[T](phase: String, i: Int)(body: => T): T =
+      Checkpoints.labeled(spark, s"pagerank:$phase:$i")(body)
     val e0 = edges.select(col(src).cast("long").as("__src"),
         col(dst).cast("long").as("__dst"),
         weight.map(w => col(w).cast("double")).getOrElse(lit(1.0))
@@ -115,22 +100,19 @@ object PageRank {
       .filter(col("__src") =!= col("__dst") &&
         col("__src").isNotNull && col("__dst").isNotNull)
     val e = weight match {
-      case None =>
-        e0.select("__src", "__dst").distinct()
-      case Some(_) =>
-        e0.filter(col("__w") > 0.0).distinct()
+      case None => e0.select("__src", "__dst")
+      case Some(_) => e0.filter(col("__w") > 0.0)
     }
-    // the edge relation is checkpointed ALREADY HASH-PARTITIONED on
-    // __src (localCheckpoint preserves physical partitioning), so the
-    // per-iteration contribution join never re-shuffles the edges —
-    // only the nodes-sized rank state moves. Out-mass __deg rides the
-    // NODE state instead of being denormalized onto every edge row
-    // (r14 carried it edge-wide: 8·|E| bytes re-scanned per step).
-    val eP = e.repartition(col("__src")).localCheckpoint()
+    // loop-invariant edges, hash-partitioned on __src: the per-round
+    // contribution join never re-shuffles them. The distinct runs after
+    // the __src exchange (hash(__src) clusters every (__src, ...) key),
+    // so the edges shuffle once.
+    val eP = label("edges", 0)(Checkpoints.fresh(
+      e.repartition(col("__src")).distinct(), "__src"))
     // out-mass per source: the exact count (unweighted) or the
     // dst-ordered fold of weights (deterministic under any
-    // partitioning; exact when weights are integer-valued); scans the
-    // checkpointed edges, already grouped by their partitioning key
+    // partitioning; exact when weights are integer-valued); the
+    // checkpointed edges are already clustered on the grouping key
     val deg = weight match {
       case None =>
         eP.groupBy("__src").agg(count(lit(1)).as("__deg"))
@@ -138,12 +120,40 @@ object PageRank {
         eP.groupBy("__src")
           .agg(orderedSum(col("__dst"), col("__w")).as("__deg"))
     }
-    val n = ndPlain.count()
-    // the uniform path keeps the ORIGINAL literal expressions so the
-    // pre-personalization results stay bit-identical
+    // loop-invariant node state (seed flag + out-mass __deg), keyed
+    // on __id: the update join below is co-partitioned with the
+    // __dst-keyed contribution aggregate. Seeds outside the node set
+    // fall away in the left join. Both joins are co-partitioned on the
+    // node key (the distincts' exchanges, the __src-keyed edges), so
+    // the shuffle_hash hints add no exchange where a broadcast would
+    // add a job.
+    val nd = nodes.select(col(id).cast("long").as("__id")).distinct()
+    val seeded = resetTo match {
+      case None => nd.withColumn("__seed", lit(false))
+      case Some(seedsDf) =>
+        val seeds = seedsDf.select(col(seedsDf.columns.head).cast("long")
+          .as("__id")).distinct().withColumn("__seed", lit(true))
+        nd.join(seeds.hint("shuffle_hash"), Seq("__id"), "left")
+          .withColumn("__seed", coalesce(col("__seed"), lit(false)))
+    }
+    val ndState = label("nodes", 0)(Checkpoints.fresh(
+      seeded.join(deg.withColumnRenamed("__src", "__id")
+        .hint("shuffle_hash"), Seq("__id"), "left"), "__id"))
+    // N and |S| in one aggregate over the checkpointed node state
+    val sizes = label("sizes", 0)(ndState
+      .agg(count(lit(1)), count(when(col("__seed"), lit(1)))).head())
+    val n = sizes.getLong(0)
+    val sCount = sizes.getLong(1)
+    require(resetTo.isEmpty || sCount >= 1,
+      "resetTo must intersect the node set in at least one id")
+    // teleport mass: uniform 1/N, or 1/|S| on the seed set and 0
+    // elsewhere (personalized). The uniform path keeps the ORIGINAL
+    // literal expressions so the pre-personalization results stay
+    // bit-identical.
+    val p = when(col("__seed"), lit(1.0) / lit(sCount)).otherwise(lit(0.0))
     val base = resetTo match {
       case None => lit(1.0 - damping) / lit(n)
-      case Some(_) => lit(1.0 - damping) * col("__p")
+      case Some(_) => lit(1.0 - damping) * p
     }
     val contribOf = (rank: org.apache.spark.sql.Column,
                      w: org.apache.spark.sql.Column,
@@ -152,29 +162,19 @@ object PageRank {
         case None => rank / d
         case Some(_) => rank * w / d
       }
-    // loop-invariant node state (teleport mass __p + out-mass __deg),
-    // hash-partitioned on __id and checkpointed ONCE: the update join
-    // below is then co-partitioned with the __dst-keyed contribution
-    // aggregate — zero node-side exchange inside the loop
-    val ndState = nd
-      .join(deg.withColumnRenamed("__src", "__id"), Seq("__id"), "left")
-      .repartition(col("__id")).localCheckpoint()
-    var ranks = resetTo match {
-      case None =>
-        ndState.select(col("__id"), (lit(1.0) / lit(n)).as("__rank"),
-          col("__deg"))
-      case Some(_) =>
-        ndState.select(col("__id"), col("__p").as("__rank"),
-          col("__deg"))
-    }
+    var ranks = ndState.select(col("__id"),
+      (resetTo match {
+        case None => lit(1.0) / lit(n)
+        case Some(_) => p
+      }).as("__rank"), col("__deg"))
     def step(cur: DataFrame): DataFrame = {
       // two-level fold: salt-bucket partial ordered sums (buffer ≤
       // indeg/S per group even on a hub), then the ordered merge of
-      // the ≤ S subtotals. The explicit __dst repartition feeds BOTH
-      // aggregates (hash(__dst) satisfies each grouping) — one
-      // exchange where the r14 shape paid two; the shuffle_hash hint
-      // keeps the edges side unsorted (SMJ would sort |E| rows per
-      // step to join a nodes-sized build side).
+      // the ≤ S subtotals. The explicit __dst repartition is the
+      // round's one exchange and feeds BOTH aggregates (hash(__dst)
+      // satisfies each grouping); the shuffle_hash hints keep the
+      // edges side unsorted (SMJ would sort |E| rows per step to join
+      // a nodes-sized build side).
       val contrib = eP
         .join(cur.hint("shuffle_hash"), eP("__src") === cur("__id"))
         .select(col("__dst"), col("__src"),
@@ -193,27 +193,22 @@ object PageRank {
             .as("__rank"),
           col("__deg"))
     }
-    for (_ <- 0 until iters) {
-      // one step per checkpointed round: the r19 A/B measured fused
-      // two-step rounds flat at bench scale (6.11 s vs 6.22 s solo), so
-      // the simpler round with half the plan depth per checkpoint stays.
-      // Stats-safe checkpoint: plain localCheckpoint carries the
-      // round's multiplied sizeInBytes forward and compounds it
-      // across iterations (core/Checkpoints.scala). The eager
-      // checkpoint materializes the new round (scanning the previous
-      // ranks' cache), after which the superseded round is released.
+    // one step per checkpointed round: fused two-step rounds were
+    // flat in the r19 A/B and again on perfbench `iterative`
+    // (BENCH_NOTES.md, "PageRank cadence"), so the round with half the
+    // plan depth per checkpoint stays. The superseded round is
+    // released once its successor is materialized.
+    for (t <- 0 until iters - 1) {
       val prev = ranks
-      ranks = graft.core.Checkpoints.fresh(step(ranks))
-      graft.core.Checkpoints.release(prev)
+      ranks = label("round", t)(Checkpoints.fresh(step(ranks), "__id"))
+      Checkpoints.release(prev)
     }
-    // materialize the result, then release the final round's cached
-    // state — repeated invocations in one session leave no CacheManager
-    // entries behind (the plain edge/node-state localCheckpoints are
-    // RDD-cached only and reclaimed by the ContextCleaner on scope exit)
-    val out = ranks
+    // the last step is checkpointed as the output itself; then every
+    // checkpoint of this call is released
+    val out = label("round", iters - 1)(step(ranks)
       .select(col("__id").as(id), col("__rank").as("pagerank"))
-      .localCheckpoint()
-    graft.core.Checkpoints.release(ranks)
+      .localCheckpoint())
+    Seq(ranks, ndState, eP).foreach(Checkpoints.release)
     out
   }
 }

@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   *   score(q,d) = Σ_{t ∈ q∩d} idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
   *   idf(t)     = ln(1 + (N − df + 0.5)/(df + 0.5))
   *
-  * Architecture is the inverted-index shape: one explode+aggregate
-  * builds the postings (term → doc, tf) and per-doc lengths, the
-  * 1-row corpus stats (N, avgdl) ride a broadcast, the query terms
+  * Architecture is the inverted-index shape: the postings (doc, term,
+  * tf, dl) are built inside the scan stage — each document's sorted
+  * token array is cut into runs of equal terms, one (term, run length)
+  * row per run, with dl = the token count — the 1-row corpus stats
+  * (N, avgdl) ride a broadcast, the query terms
   * join the postings on the term key (broadcast when the query set is
   * small — the planner sees its size), and the per-(query,doc) sum
   * folds the per-term contributions IN TERM ORDER
@@ -25,9 +27,9 @@ import org.apache.spark.sql.functions._
   * q_perplexity convention, mirrored in the oracle's
   * `list_reduce(list(... ORDER BY term))`.
   *
-  * At 100 TB: the postings build is ONE shuffle (the per-doc length
-  * rides the token explode, so no separate lengths aggregate or
-  * doc-keyed join); corpus stats (N, avgdl) are a scan-side
+  * At 100 TB: the postings build needs NO shuffle (tf never crosses
+  * documents, so it is a per-row computation, and dl is a projection
+  * of the same row); corpus stats (N, avgdl) are a scan-side
   * single-partition fold over `documents` (dl ≡ token count, a
   * projection — no postings re-derivation); document frequency is
   * computed only for terms the query set mentions (broadcast
@@ -44,9 +46,8 @@ object Bm25 {
     * postings (explode(split(NULL)) drops the row), so they must not
     * count in n_docs/avgdl either: one filtered corpus feeds postings
     * AND stats, keeping idf consistent with the oracle's dl-derived
-    * population. dl (token count) is carried through the explode:
-    * size(split) equals the exploded term count, so max(dl) per doc
-    * reconstructs the length without a second aggregate + join. */
+    * population. dl is the document's token count, projected on each
+    * of its postings rows. */
   private[llm] def postingsAndStats(docs: DataFrame, docId: String,
       textCol: String): (DataFrame, DataFrame) = {
     val corpus = docs.filter(col(textCol).isNotNull)

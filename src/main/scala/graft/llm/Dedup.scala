@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
+
 /** Deduplication operators for large-scale text corpora (builder brief:
   * first-class components beyond the reference's own surface).
   *
@@ -693,28 +695,30 @@ object Dedup {
   def resolveComponents(docs: DataFrame, pairs: DataFrame, id: String,
                         maxIters: Int = 64, jumpLevels: Int = 2): DataFrame = {
     require(jumpLevels >= 1, s"jumpLevels=$jumpLevels must be >= 1")
-    // checkpointed ALREADY hash-partitioned on src (localCheckpoint
-    // preserves physical partitioning): the per-round message join
-    // then never re-shuffles the edge set — only the nodes-sized
-    // label relation moves (r15 graph-loop discipline)
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    var labels = docs.select(col(id).as("node"), col(id).as("comp"))
-      .localCheckpoint(true)
-    // the PERSISTED frame backing `labels` (labels itself is a
-    // projection of it from round 1 on; unpersist matches exact
-    // plans, so the release must target the persisted frame)
-    var labelsCached = labels
+    val spark = docs.sparkSession
+    def label[T](phase: String, i: Int)(body: => T): T =
+      Checkpoints.labeled(spark, s"components:$phase:$i")(body)
+    // loop-invariant edges, hash-partitioned on src: the per-round
+    // message join never re-shuffles them
+    val edges = label("edges", 0)(Checkpoints.fresh(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      "src"))
+    // round state (node, comp, __chg), keyed on node: round 0 reads
+    // its labels four times, so the docs are materialized once here
+    var state = label("labels", 0)(Checkpoints.fresh(
+      docs.select(col(id).as("node"), col(id).as("comp"),
+        lit(true).as("__chg")), "node"))
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
+      val labels = state.drop("__chg")
       val neighborMin = edges
         .join(labels.hint("shuffle_hash"), edges("src") === labels("node"))
         .groupBy(col("dst")).agg(min("comp").as("ncomp"))
       val prop = labels
-        .join(neighborMin, labels("node") === neighborMin("dst"), "left")
+        .join(neighborMin.hint("shuffle_hash"),
+          labels("node") === neighborMin("dst"), "left")
         .select(col("node"),
           least(col("comp"), coalesce(col("ncomp"), col("comp")))
             .as("comp"),
@@ -724,10 +728,11 @@ object Dedup {
       // level is a left join against the SAME label relation, so the
       // planner builds ONE broadcast and reuses it (ReusedExchange —
       // the levels' subtrees are canonically identical) and each extra
-      // level costs only a nodes-sized in-plan probe. What a level
+      // level costs only a nodes-sized in-plan probe; the checkpoint's
+      // measured size is what lets it broadcast. What a level
       // BUYS is a full extra hop of path compression per round, and a
-      // ROUND is the expensive unit here — one scheduled job + eager
-      // checkpoint + convergence count, ~0.4 s of fixed cost at bench
+      // ROUND is the expensive unit here — its scheduled jobs and
+      // checkpoint are ~0.4 s of fixed cost at bench
       // scale regardless of data (r18 profile: q_dbscan spent 5+ s in
       // ~12 rounds of sub-100 ms jobs). Levels beyond 2 were MEASURED
       // not to pay (r18): convergence is bounded by min-label EDGE
@@ -739,11 +744,6 @@ object Dedup {
       // no-op (join miss keeps comp); the FINAL labels are the same
       // fixpoint (component min) at any level count — levels move
       // only how fast the loop gets there.
-      //
-      // The changed flag rides along in the round's own projection, so
-      // ONE count() both materializes the lazy checkpoint (it scans
-      // every partition) and answers convergence — one scheduled job
-      // per round instead of a separate join+action on the checkpoint.
       var cur = prop
       var lvl = 0
       while (lvl < jumpLevels) {
@@ -757,33 +757,23 @@ object Dedup {
               .as("__chg"))
         lvl += 1
       }
-      // Checkpoints.fresh, NOT plain localCheckpoint: a carried-stats
-      // checkpoint compounds sizeInBytes multiplicatively through the
-      // loop and overflows BigInteger around round ~25 (see
-      // core/Checkpoints.scala — measured, and it killed a 64-round
-      // run before this)
-      val updated = graft.core.Checkpoints.fresh(cur, eager = false)
-      converged = updated.filter(col("__chg")).count() == 0
-      // the count above materialized `updated` (checkpoint + cache);
-      // the superseded round's persisted labels can now be released
-      // (no-op on round 0's unpersisted initial localCheckpoint)
-      graft.core.Checkpoints.release(labelsCached)
-      labelsCached = updated
-      labels = updated.drop("__chg")
+      val prev = state
+      state = label("round", i)(Checkpoints.fresh(cur, "node"))
+      Checkpoints.release(prev)
+      converged = label("converged", i)(
+        Checkpoints.isEmpty(state.filter(col("__chg"))))
       i += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"resolveComponents did not converge in $maxIters rounds — " +
           "component labels would be partial; raise maxIters")
-    // materialize the result, then release the final round's cached
-    // labels — repeated invocations in one session leave no
-    // CacheManager entries behind (the edge checkpoint is RDD-cached
-    // only and reclaimed by the ContextCleaner on scope exit)
-    val out = labels.select(col("node").as(id), col("comp").as("keep_id"),
-        (col("node") === col("comp")).as("is_kept"))
-      .localCheckpoint()
-    graft.core.Checkpoints.release(labelsCached)
+    // materialize the result, then release every checkpoint of this
+    // call
+    val out = label("output", 0)(state.select(col("node").as(id),
+        col("comp").as("keep_id"), (col("node") === col("comp")).as("is_kept"))
+      .localCheckpoint())
+    Seq(state, edges).foreach(Checkpoints.release)
     out
   }
 

@@ -22,6 +22,23 @@ import graft.models.StlLite
   */
 object QueriesSeries {
 
+  /** The synthetic 3-out-link doc graph of the graph queries (the
+    * corpus has no link column): src = doc_id and dst = (doc_id·k + c)
+    * mod (max doc_id + 1) for (k, c) = (7, 1), (13, 3), (31, 11), in
+    * one scan of `d`; the oracle SQL builds the same edge multiset.
+    * The modulus side reads only non-null ids (max skips nulls anyway)
+    * so that, under consumers that drop null sources (all six do), both
+    * sides read `d` through one shared exchange. */
+  private def docLinkGraph(d: DataFrame): DataFrame = {
+    val m = d.filter(col("doc_id").isNotNull)
+      .agg((max("doc_id") + 1).as("__m"))
+    d.crossJoin(broadcast(m)).select(col("doc_id").as("src"),
+      explode(array(
+        (col("doc_id") * 7 + 1) % col("__m"),
+        (col("doc_id") * 13 + 3) % col("__m"),
+        (col("doc_id") * 31 + 11) % col("__m"))).as("dst"))
+  }
+
   val map: Map[String, (SparkSession, String) => DataFrame] = Map(
     // P3: fractional train/val/test split
     "q_split" -> ((s, dir) =>
@@ -693,14 +710,7 @@ object QueriesSeries {
     // integer-pinned at 1e9 (multi-step float pipeline house rule).
     "q_pagerank" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
       graft.graph.PageRank.pageRank(d, "doc_id", edges, "src", "dst",
           iters = 10)
         .select(col("doc_id"),
@@ -716,14 +726,7 @@ object QueriesSeries {
     // Unreachable-from-seed nodes score exactly 0 (no uniform floor).
     "q_pagerank_pers" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
         .withColumn("w",
           ((col("src") + col("dst")) % 3 + 1).cast("double"))
       val seeds = d.filter(col("doc_id") % 17 === 0)
@@ -741,14 +744,7 @@ object QueriesSeries {
     // salt-bucketed contribution sums, integer-pinned at 1e9.
     "q_hits" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
       graft.graph.Hits.hits(d, "doc_id", edges, "src", "dst",
           iters = 5)
         .select(col("doc_id"),
@@ -765,14 +761,7 @@ object QueriesSeries {
     // with no float convention at all.
     "q_triangles" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
       graft.graph.Triangles.triangleCounts(d, "doc_id", edges,
         "src", "dst")
     }),
@@ -782,14 +771,7 @@ object QueriesSeries {
     // score ~1, broadcast hubs ~0); rides q_triangles' machinery.
     "q_clustering" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
       graft.graph.Triangles.clusteringCoefficient(d, "doc_id", edges,
         "src", "dst")
     }),
@@ -803,14 +785,7 @@ object QueriesSeries {
     // map-side-combined min exchange (r15 PageRank loop discipline).
     "q_communities" -> ((s, dir) => {
       val d = docs(s, dir).select(col("doc_id"))
-      val m = d.agg((max("doc_id") + 1).as("__m"))
-      val withM = d.crossJoin(broadcast(m))
-      val edges = withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 7 + 1) % col("__m")).as("dst"))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 13 + 3) % col("__m")).as("dst")))
-        .unionByName(withM.select(col("doc_id").as("src"),
-          ((col("doc_id") * 31 + 11) % col("__m")).as("dst")))
+      val edges = docLinkGraph(d)
       graft.graph.Communities.minLabelPropagation(d, "doc_id", edges,
         "src", "dst", rounds = 3)
     }),

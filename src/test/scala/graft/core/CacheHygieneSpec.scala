@@ -3,18 +3,18 @@ package graft.core
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Machine check for the r16 cache-release contract (ADVICE r15 #2):
-  * every iterative graph operator materializes its result and releases
-  * ALL of its CacheManager-registered round state before returning, so
-  * repeated invocations in one session (a bench runs each query 4+
-  * times) accumulate NOTHING in the shared cache.
+/** Machine check for the cache-release contract: every iterative
+  * graph operator materializes its result and releases ALL of its
+  * round state before returning, so repeated invocations in one
+  * session (a bench runs each query 4+ times) accumulate NOTHING.
   *
-  * The CacheManager is the right observable: `Checkpoints.fresh`
-  * persists through `Dataset.persist`, which registers in the session
-  * CacheManager — a strong reference the ContextCleaner can never
-  * collect (unlike plain localCheckpoint RDD caches, which die with
-  * their frames on GC). Before commit 90f8ff5 the final round's state
-  * leaked one entry per invocation and this spec fails on that build.
+  * Two observables. The CacheManager: a `Dataset.persist` registers
+  * there, a strong reference the ContextCleaner can never collect
+  * (before commit 90f8ff5 the final round's state leaked one entry per
+  * invocation). And the persisted RDDs: `Checkpoints.fresh` keeps round
+  * state in checkpointed RDDs, which stay cached until released or
+  * garbage-collected, so every RDD persisted during the calls must be
+  * gone afterwards except the output's own checkpoint.
   *
   * `sharedState`/`cacheManager` are private[sql], reached by
   * reflection (Scala package-private is public bytecode) — this is a
@@ -38,21 +38,32 @@ class CacheHygieneSpec extends SparkSpec {
     val nodes = (0L to 30L).toDF("id")
     val edges = (0L until 30L).map(i => (i, (i * 7 + 1) % 31))
       .toDF("src", "dst")
-    (1 to 2).foreach { _ =>
-      graft.graph.PageRank.pageRank(nodes, "id", edges, "src", "dst",
-        iters = 3).collect()
-      graft.graph.Hits.hits(nodes, "id", edges, "src", "dst",
-        iters = 3).collect()
-      graft.graph.Communities.minLabelPropagation(nodes, "id", edges,
-        "src", "dst", rounds = 3).collect()
-      graft.graph.Communities.minLabelPropagation(nodes, "id", edges,
-        "src", "dst", rounds = 40, earlyStop = true).collect()
-      graft.llm.Dedup.resolveComponents(nodes.toDF("id"),
-        edges.select(col("src").as("id_a"), col("dst").as("id_b")),
-        "id").collect()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val outs = (1 to 2).flatMap { _ =>
+      Seq(
+        graft.graph.PageRank.pageRank(nodes, "id", edges, "src", "dst",
+          iters = 3),
+        graft.graph.Hits.hits(nodes, "id", edges, "src", "dst",
+          iters = 3),
+        graft.graph.Communities.minLabelPropagation(nodes, "id", edges,
+          "src", "dst", rounds = 3),
+        graft.graph.Communities.minLabelPropagation(nodes, "id", edges,
+          "src", "dst", rounds = 40, earlyStop = true),
+        graft.llm.Dedup.resolveComponents(nodes.toDF("id"),
+          edges.select(col("src").as("id_a"), col("dst").as("id_b")),
+          "id"))
     }
+    outs.foreach(_.collect())
     assert(cacheManagerIsEmpty,
       "an iterative operator left persisted round state in the " +
         "CacheManager — release the final round after materializing")
+    // each output is one localCheckpoint over one RDD
+    val outputRdds = outs.map(_.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get).toSet
+    val left = sc.getPersistentRDDs.keySet -- before -- outputRdds
+    assert(left.isEmpty, s"persisted RDDs ${left.toSeq.sorted} outlived " +
+      "their call — release every checkpoint after materializing")
   }
 }
