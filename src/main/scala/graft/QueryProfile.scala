@@ -2,8 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -14,13 +16,17 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   *  - the warm build+materialize wall time (the quantity Bench times,
   *    eager checkpoints inside the query lambda included), the build
   *    time alone, and the row count;
+  *  - the generated classes that invocation compiled, and the compile
+  *    time (a class found in the JVM-wide codegen cache costs nothing);
   *  - plan counts of the executed final plan: shuffles, broadcasts,
   *    sorts, scans with pushed filters, whole-stage codegen spans and
   *    broadcast nested-loop joins;
   *  - every job of the invocation (iterative queries do their work in
   *    driver-action jobs during DataFrame construction, invisible to
-  *    plan metrics) with its wall time, task count, label and call
-  *    site, then one line per call site with its job count;
+  *    plan metrics) with its wall time, the tasks of its stages that
+  *    ran (a stage whose shuffle output already exists is skipped and
+  *    counts none), its label and call site, then one line per call
+  *    site with its job count;
   *  - the executed plan with its non-zero operator metrics (rows out,
   *    operator times, shuffle bytes), the local substitute for the UI's
   *    SQL tab.
@@ -95,13 +101,20 @@ object QueryProfile {
     outDir.foreach(d => Files.createDirectories(Paths.get(d)))
     val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts.put(js.jobId, Job(js.jobId, js.time, 0L,
-          js.stageInfos.map(_.numTasks).sum,
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        js.stageIds.foreach(stageJob.put(_, js.jobId))
+        starts.put(js.jobId, Job(js.jobId, js.time, 0L, 0,
           js.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse(""),
           Option(js.properties).flatMap(p =>
             Option(p.getProperty("spark.job.description"))).getOrElse("")))
+      }
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        Option(stageJob.get(ss.stageInfo.stageId)).foreach { id =>
+          starts.computeIfPresent(id, (_, j) =>
+            j.copy(tasks = j.tasks + ss.stageInfo.numTasks))
+        }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val s = starts.remove(je.jobId)
         if (s != null) jobLog.add(s.copy(end = je.time))
@@ -114,6 +127,8 @@ object QueryProfile {
       jobLog.clear()
       spark.sparkContext.addSparkListener(listener)
       val rows = spark.sparkContext.longAccumulator
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val df = build(name)(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
@@ -124,12 +139,15 @@ object QueryProfile {
         rows.add(n)
       }
       val sec = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileSec = (CodeGenerator.compileTime - compileNs0) / 1e9
       // drain BEFORE removing: the listener bus is async, so the final
       // job's onJobEnd can post after removal and be silently dropped,
       // under-reporting the job-time sum (ADVICE r18)
       Thread.sleep(200)
       spark.sparkContext.removeSparkListener(listener)
       println(f"== $name%s: $sec%.2f s warm (build $tBuild%.2f s) rows=${rows.sum}")
+      println(f"  codegen: $compiles compiles, $compileSec%.2f s")
       println("  plan: " + planCounts(qe.executedPlan)
         .map { case (k, v) => s"$k=$v" }.mkString(" "))
       val jl = jobLog.toArray(Array.empty[Job]).sortBy(_.id)
