@@ -5,7 +5,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.SeriesOps
+import graft.core.{Folds, SeriesOps}
 import graft.events.Events
 import graft.io.NabIo
 import graft.metrics.Metrics
@@ -88,8 +88,11 @@ object Pipelines {
           .withColumn("__center", col("__roll_mean"))
       case _ =>
         // train residual std for the zero-sigma fallback (W2)
-        val trainStd = df.filter(col("split") === "Train")
-          .groupBy(series).agg(stddev_samp(col("resid")).as("__train_std"))
+        // (an ordered fold over (ts, resid): the same bits on every run)
+        val trainStd = df.filter(col("split") === "Train").groupBy(series)
+          .agg(Folds.inOrder(col(ts), col("resid")).as("__xs"))
+          .select(col(series),
+            Folds.meanStd(col("__xs"), ddof = 1)._2.as("__train_std"))
         SeriesOps.withRollingStats(df, series, ts, "resid",
           cfg.rollingWindow, cfg.minPeriods, "__roll_mean", "__roll_std")
           .join(broadcast(trainStd), Seq(series), "left")
@@ -241,7 +244,7 @@ object Pipelines {
         joinFit(prep, StlExact.decompose(prep, key, ts, value, cfg.period),
           key, ts, col("resid").as("__target"))
       else prep.withColumn("__target", col(value))
-    val scaled = SeriesOps.standardScale(base, key, "__target", "__tn",
+    val scaled = SeriesOps.standardScale(base, key, ts, "__target", "__tn",
       popStd = true)
     // kept: the scaling reads `base` twice and the AR fit reads `scaled`
     // twice; without it the STL fit runs up to four times
@@ -381,7 +384,7 @@ object Pipelines {
     // the second-order residual; rows without a full lag window score 0
     val arIn = SeriesOps.standardScale(
       m2.select(col(key), col(ts), col("__stl_resid"), col("split")),
-      key, "__stl_resid", "__tn", popStd = true)
+      key, ts, "__stl_resid", "__tn", popStd = true)
     val arOut = AutoRegressor.run(arIn, key, ts, "__tn", seqLen,
       cfg.trainFrac)
     val arScored = SeriesOps.withRollingStats(arOut, key, ts, "resid",

@@ -34,9 +34,10 @@ object EngineTuning {
 
   def conf: Map[String, String] = Map(
     // The engine's bit-exactness contract makes every oracle-checked
-    // float sum an ORDERED fold (core/Folds: aggregate over
-    // array_sort(collect_list(...))) — a typed-buffer aggregate that
-    // plans as ObjectHashAggregate. Stock Spark falls that operator
+    // float fold an ORDERED fold (core/Folds, the one definition: the
+    // group's (ord, v) structs collected, sorted and folded by
+    // `aggregate`) — a typed-buffer aggregate that plans as
+    // ObjectHashAggregate. Stock Spark falls that operator
     // back to SORT-based aggregation after only 128 distinct keys per
     // task (spark.sql.objectHashAggregate.sortBased.fallbackThreshold),
     // so every fold-heavy stage (BM25 scoring, graph contribution

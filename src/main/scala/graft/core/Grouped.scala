@@ -1,6 +1,9 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, Dataset, Encoder, KeyValueGroupedDataset}
+import java.sql.Timestamp
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
+import org.apache.spark.sql.functions.col
 
 /** Pinned-parallelism per-key grouping for CPU-dominated `mapGroups` /
   * `flatMapGroups` / `cogroup` model fits (guide §2: right-size
@@ -41,9 +44,12 @@ import org.apache.spark.sql.{Column, Dataset, Encoder, KeyValueGroupedDataset}
   *
   * Semantics: group membership and the key value are identical to
   * `groupByKey`; only the row-to-partition assignment changes, and every
-  * caller's group function is partitioning-independent (each sorts its
-  * group on an ordinal/timestamp before folding — the house
-  * bit-determinism convention).
+  * caller's group function is partitioning-independent: it puts its
+  * group in a total order before folding floats (the house
+  * bit-determinism convention). For a (series, ts, value) fit that
+  * order is stated once, in [[series]]: the per-series kernels take
+  * their points from it already sorted, and the streaming operators
+  * sort each micro-batch with the same [[pointOrder]].
   */
 object Grouped {
 
@@ -75,16 +81,40 @@ object Grouped {
     * ts) contract, exact medians/integer sums, internally-sorted group
     * folds) — never to feed an UNORDERED float aggregation whose
     * partial-sum grouping the partition layout would change. */
-  def pin[T](ds: Dataset[T], keys: Seq[String]): Dataset[T] = {
-    import org.apache.spark.sql.functions.col
+  def pin[T](ds: Dataset[T], keys: Seq[String]): Dataset[T] =
     ds.repartition(pinnedPartitions(ds), keys.map(col): _*)
+
+  /** `ts` ascending at full (microsecond) precision, NULL first — the
+    * order `row_number() OVER (PARTITION BY series ORDER BY ts)` gives. */
+  val tsOrder: Ordering[Timestamp] = new Ordering[Timestamp] {
+    def compare(a: Timestamp, b: Timestamp): Int =
+      if (a eq null) { if (b eq null) 0 else -1 }
+      else if (b eq null) 1
+      else a.compareTo(b)
   }
 
-  /** Column-keyed grouping WITHOUT a repartition — for inputs already
-    * pinned on `key` (via [[pin]] upstream): the grouping rides the
-    * existing partitioning with zero additional exchange, unlike
-    * `groupByKey(lambda)` whose AppendColumns key forces one. */
-  def keyed[K: Encoder, T: Encoder](ds: Dataset[T], key: Column)
-      : KeyValueGroupedDataset[K, T] =
-    ds.groupBy(key).as[K, T]
+  /** The one order a series is folded in: [[tsOrder]], then `value`, so
+    * duplicate timestamps fold the same way on every run. */
+  val pointOrder: Ordering[(Timestamp, Double)] =
+    Ordering.Tuple2(tsOrder, Ordering.Double.TotalOrdering)
+
+  /** The per-series kernel entry: `series` cast to string, `ts` to
+    * timestamp and `value` to double, grouped through the [[pinned]]
+    * exchange (one `REPARTITION_BY_NUM`, no window), each group sorted
+    * in [[pointOrder]] and handed to `fit` as arrays. */
+  def series[O: Encoder](df: DataFrame, series: String, ts: String,
+                         value: String)(
+      fit: (String, Array[Timestamp], Array[Double]) => Iterator[O])
+      : Dataset[O] = {
+    import df.sparkSession.implicits._
+    val typed = df.select(col(series).cast("string").as("sk"),
+        col(ts).cast("timestamp").as("ts"),
+        col(value).cast("double").as("value"))
+      .as[(String, Timestamp, Double)]
+    pinned[String, (String, Timestamp, Double)](typed, col("sk"))
+      .flatMapGroups { (sk, it) =>
+        val pts = it.map(r => (r._2, r._3)).toArray.sorted(pointOrder)
+        fit(sk, pts.map(_._1), pts.map(_._2))
+      }
+  }
 }

@@ -112,13 +112,16 @@ object SeriesOps {
   }
 
   /** F6: per-series standard scaling `(x - mean) / std` (run_lstm.py:36-39;
-    * popStd=true matches `np.std` ddof=0 there, false matches ddof=1). */
-  def standardScale(df: DataFrame, series: String, value: String,
-                    out: String, popStd: Boolean = true,
+    * popStd=true matches `np.std` ddof=0 there, false matches ddof=1).
+    * Mean and std are ordered folds over (`ts`, `value`), so the scaled
+    * values do not depend on partitioning. */
+  def standardScale(df: DataFrame, series: String, ts: String,
+                    value: String, out: String, popStd: Boolean = true,
                     eps: Double = 1e-9): DataFrame = {
-    val sd = if (popStd) stddev_pop(col(value)) else stddev_samp(col(value))
+    val (mu, sd) = Folds.meanStd(col("__xs"), if (popStd) 0 else 1)
     val stats = df.groupBy(series)
-      .agg(avg(col(value)).as("__mu"), sd.as("__sd"))
+      .agg(Folds.inOrder(col(ts), col(value)).as("__xs"))
+      .select(col(series), mu.as("__mu"), sd.as("__sd"))
     df.join(broadcast(stats), Seq(series))
       .withColumn(out, (col(value) - col("__mu")) / (col("__sd") + lit(eps)))
       .drop("__mu", "__sd")

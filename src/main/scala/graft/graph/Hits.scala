@@ -1,9 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Folds}
 
 /** HITS — hubs & authorities (Kleinberg, JACM 1999) as a DataFrame
   * power iteration: the query-independent companion to PageRank for
@@ -45,9 +45,6 @@ import graft.core.Checkpoints
   * HITS).
   */
 object Hits {
-
-  private def orderedSum(ord: Column, v: Column) =
-    graft.core.Folds.orderedSum(ord, v)
 
   /** Run `iters` HITS iterations. Output: (id, authority, hub). */
   def hits(nodes: DataFrame, id: String, edges: DataFrame,
@@ -115,9 +112,9 @@ object Hits {
           col("__score").as("__s"))
         .repartition(col(toCol))
         .groupBy(col(toCol), col("__sb"))
-        .agg(orderedSum(col(fromCol), col("__s")).as("__ps"))
+        .agg(Folds.orderedSum(col(fromCol), col("__s")).as("__ps"))
         .groupBy(col(toCol))
-        .agg(orderedSum(col("__sb"), col("__ps")).as("__score"))
+        .agg(Folds.orderedSum(col("__sb"), col("__ps")).as("__score"))
         .withColumnRenamed(toCol, "__id")
     // the initial hubs are a projection of the __id-keyed node set,
     // not a checkpoint of their own

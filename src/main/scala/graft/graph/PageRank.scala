@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Folds}
 
 /** PageRank (Brin & Page 1998) as a DataFrame power iteration — the
   * link-graph authority score a crawl pipeline uses to prioritize its
@@ -65,11 +65,6 @@ import graft.core.Checkpoints
   */
 object PageRank {
 
-  /** Source-ordered float fold (the shared house convention). */
-  private def orderedSum(ord: org.apache.spark.sql.Column,
-                         v: org.apache.spark.sql.Column) =
-    graft.core.Folds.orderedSum(ord, v)
-
   /** Run `iters` PageRank steps. `nodes` supplies the vertex set (so
     * isolated nodes keep their base mass); `edges` may contain
     * duplicates and self-loops, which are dropped first (duplicate
@@ -118,7 +113,7 @@ object PageRank {
         eP.groupBy("__src").agg(count(lit(1)).as("__deg"))
       case Some(_) =>
         eP.groupBy("__src")
-          .agg(orderedSum(col("__dst"), col("__w")).as("__deg"))
+          .agg(Folds.orderedSum(col("__dst"), col("__w")).as("__deg"))
     }
     // loop-invariant node state (seed flag + out-mass __deg), keyed
     // on __id: the update join below is co-partitioned with the
@@ -182,9 +177,9 @@ object PageRank {
           pmod(col("__src"), lit(saltBuckets.toLong)).as("__sb"))
         .repartition(col("__dst"))
         .groupBy("__dst", "__sb")
-        .agg(orderedSum(col("__src"), col("__c")).as("__ps"))
+        .agg(Folds.orderedSum(col("__src"), col("__c")).as("__ps"))
         .groupBy("__dst")
-        .agg(orderedSum(col("__sb"), col("__ps")).as("__cs"))
+        .agg(Folds.orderedSum(col("__sb"), col("__ps")).as("__cs"))
       ndState
         .join(contrib.hint("shuffle_hash"),
           ndState("__id") === contrib("__dst"), "left")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Okapi BM25 ranked retrieval (Robertson et al., TREC-3 1994; the
   * `ln(1 + ...)` idf floor is Lucene's non-negative variant) — the
   * lexical search face of the corpus: decontamination triage
@@ -22,7 +24,7 @@ import org.apache.spark.sql.functions._
   * join the postings on the term key (broadcast when the query set is
   * small — the planner sees its size), and the per-(query,doc) sum
   * folds the per-term contributions IN TERM ORDER
-  * (`sort_array(collect_list(struct(term, contrib)))` + `aggregate`),
+  * (`core.Folds.orderedSum(term, contrib)`),
   * so the float sum is engine-reproducible bit-for-bit — the
   * q_perplexity convention, mirrored in the oracle's
   * `list_reduce(list(... ORDER BY term))`.
@@ -131,9 +133,7 @@ object Bm25 {
       .select(col("query_id"), col("doc_id"), col("term"),
         (idf * tfPart).as("contrib"))
     val scored = contribs.groupBy("query_id", "doc_id")
-      .agg(round(aggregate(
-        sort_array(collect_list(struct(col("term"), col("contrib")))),
-        lit(0.0), (acc, x) => acc + x.getField("contrib")), 6)
+      .agg(round(Folds.orderedSum(col("term"), col("contrib")), 6)
         .as("bm25"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("bm25").desc, col("doc_id").asc)
@@ -173,10 +173,7 @@ object Bm25 {
         (col("tf").cast("double") / col("dl").cast("double"))
           .as("__w"))
       .groupBy("query_id", "term")
-      .agg(aggregate(
-        sort_array(collect_list(struct(col("doc_id"),
-          col("__w").as("__w")))),
-        lit(0.0), (a, x) => a + x.getField("__w")).as("__w"))
+      .agg(Folds.orderedSum(col("doc_id"), col("__w")).as("__w"))
     val qterms = queries.select(col(queryId).as("query_id"),
         explode(split(col(textCol), " ")).as("term"))
       .distinct()

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Folds}
 
 /** Deduplication operators for large-scale text corpora (builder brief:
   * first-class components beyond the reference's own surface).
@@ -286,10 +286,8 @@ object Dedup {
       .filter(col("__rn") === 1)
       .groupBy(col(id), col("n_spans"))
       .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("span_idx"),
-            col("span_text")))),
-          s => s.getField("span_text")), " ").as("clean_text"),
+        array_join(Folds.inOrder(col("span_idx"), col("span_text")), " ")
+          .as("clean_text"),
         count(lit(1)).as("n_kept"))
       .select(col(id), col("clean_text"), col("n_spans"), col("n_kept"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Feature hashing ("hashing trick", Weinberger et al. ICML 2009) and
   * reciprocal-rank fusion (Cormack, Clarke & Buettcher SIGIR 2009) —
   * the two pieces that turn the lexical (BM25) and vector tiers into
@@ -41,8 +43,8 @@ object HashingTf {
         pmod(TextAnalysis.rollingHash(col("term")), lit(dim.toLong)))
       .groupBy("id", "bucket").agg(count(lit(1)).cast("double").as("cnt"))
     buckets.groupBy("id")
-      .agg(map_from_entries(
-        collect_list(struct(col("bucket"), col("cnt")))).as("m"))
+      .agg(map_from_entries(Folds.inOrder(col("bucket"),
+        struct(col("bucket"), col("cnt")))).as("m"))
       .select(col("id"),
         transform(sequence(lit(0L), lit(dim.toLong - 1)),
           b => coalesce(element_at(col("m"), b), lit(0.0))).as("tfvec"))

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** GPT-3-style corpus quality classifier (Brown et al. 2020 §A;
   * CCNet's fasttext filter is the same idea): train a classifier to
   * separate a CURATED slice (positive: wiki/books-like sources) from
@@ -143,10 +145,7 @@ object NbQuality {
     toks.join(broadcast(model), "__b")
       .groupBy(col("__id"))
       .agg(count(lit(1)).as("n_tokens"),
-        (aggregate(
-          transform(array_sort(collect_list(struct(col("__p"),
-            col("__llr").as("l")))), s => s.getField("l")),
-          lit(0.0), (a, x) => a + x) /
+        (Folds.orderedSum(col("__p"), col("__llr")) /
           count(lit(1)).cast("double")).as("nb_llr_mean"))
       .select(col("__id").as(id), col("n_tokens"), col("nb_llr_mean"),
         (col("nb_llr_mean") > 0).cast("int").as("is_quality"))

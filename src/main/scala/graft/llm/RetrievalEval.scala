@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *  - nDCG@k    = DCG@k / IDCG@k with binary gains,
   *                DCG = Σ_{relevant hits at position p ≤ k} 1/log₂(p+1)
   *
-  * Both DCG folds run in POSITION ORDER over bounded lists
-  * (`sort_array(collect_list)` + `aggregate`), so the float sums are
+  * Both DCG folds run in POSITION ORDER over bounded lists (the
+  * group's sorted rank list, left-folded by `aggregate` — the total
+  * order `core.Folds` states), so the float sums are
   * engine-reproducible — the q_perplexity convention. All inputs are
   * rank tables (query_id, doc_id, rank): cardinality queries × k,
   * so every join and aggregate here is trivially bounded no matter

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Corpus-assembly operators for training-data pipelines: reproducible
   * subsampling, per-stratum mixture weighting, and GPT-style sequence
   * packing. These are the steps between "deduplicated corpus" and
@@ -225,11 +227,8 @@ object Sampling {
     perDoc.join(broadcast(ratio), Seq("__b"))
       .groupBy(col(id))
       .agg(sum("__cnt").as("n_grams"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("__b"),
-            (col("__cnt") * col("__lr")).as("__w")))),
-            s => s.getField("__w")),
-          lit(0.0), (a, x) => a + x), 6).as("dsir_logw"))
+        round(Folds.orderedSum(col("__b"), col("__cnt") * col("__lr")), 6)
+          .as("dsir_logw"))
   }
 
   /** Gumbel-top-k resampling over [[dsirLogWeights]] (the DSIR paper's

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Text analysis operators for training-data pipelines: token counting,
   * quality scoring, language identification, document fingerprinting.
   * All pure column expressions (codegen'd — no UDFs).
@@ -175,10 +177,8 @@ object TextAnalysis {
         log((col("__bc") + 1).cast("double") / (col("__cc") + col("__v"))))
       .groupBy(col(id))
       .agg(count(lit(1)).as("n_bigrams"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("__pos"),
-            col("__nll")))), s => s.getField("__nll")),
-          lit(0.0), (acc, x) => acc + x) / count(lit(1)), 6)
+        round(Folds.orderedSum(col("__pos"), col("__nll")) /
+          count(lit(1)), 6)
           .as("avg_nll"))
   }
 
@@ -268,10 +268,8 @@ object TextAnalysis {
       .withColumn("__bo", when(col("__tc").isNotNull, 0L).otherwise(1L))
     scored.groupBy(col(id))
       .agg(count(lit(1)).as("n_trigrams"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("__pos"),
-            col("__nll")))), s => s.getField("__nll")),
-          lit(0.0), (acc, x) => acc + x) / count(lit(1)), 6)
+        round(Folds.orderedSum(col("__pos"), col("__nll")) /
+          count(lit(1)), 6)
           .as("avg_nll"),
         round(sum(col("__bo")).cast("double") / count(lit(1)), 6)
           .as("backoff_rate"))
@@ -588,10 +586,8 @@ object TextAnalysis {
       .withColumn("__t", col("__p") * log(col("__p") / col("__q")))
       .groupBy(col("__s").as(stratum))
       .agg(max("__st").as("n_tokens"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("__b"),
-            col("__t").as("__t")))), s => s.getField("__t")),
-          lit(0.0), (a, x) => a + x), 6).as("kl_vs_rest"))
+        round(Folds.orderedSum(col("__b"), col("__t")), 6)
+          .as("kl_vs_rest"))
   }
 
   /** Polynomial rolling-hash fingerprint of the whole document (mod a

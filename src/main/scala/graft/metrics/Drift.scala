@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Distribution-drift tests: each stratum's value distribution against
   * the union of all other strata ("vs rest", the L41 KL monitor's
   * convention), as a relation.
@@ -123,10 +125,8 @@ object Drift {
             (col("__gt") - col("__st"))))
       .groupBy(col("__s").as("stratum"))
       .agg(max("__st").as("n_points"),
-        round(aggregate(
-          transform(array_sort(collect_list(struct(col("__b"),
-            col("__t").as("__t")))), s => s.getField("__t")),
-          lit(0.0), (a, x) => a + x), 6).as("psi_vs_rest"),
+        round(Folds.orderedSum(col("__b"), col("__t")), 6)
+          .as("psi_vs_rest"),
         round(max("__d"), 9).as("ks_binned"))
   }
 

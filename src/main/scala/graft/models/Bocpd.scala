@@ -3,7 +3,6 @@ package graft.models
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** M6: Bayesian online changepoint detection, Adams–MacKay recursion with
   * a Normal-Inverse-Gamma conjugate model and Student-t predictive
@@ -138,12 +137,7 @@ object Bocpd {
           hazard: Double = 1.0 / 100): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val typed = df.select(col(series).cast("string"), col(ts), col(value))
-      .as[(String, Timestamp, Double)]
-    graft.core.Grouped.pinned[String, (String, Timestamp, Double)](
-        typed, col(typed.columns.head)).flatMapGroups { (sid, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val ys = rows.map(_._3)
+    graft.core.Grouped.series(df, series, ts, value) { (sid, tss, ys) =>
       val n = ys.length
       if (n < 3) Iterator.empty
       else {
@@ -151,8 +145,8 @@ object Bocpd {
         val std = math.sqrt(ys.map(x => (x - mean) * (x - mean)).sum / n)
         val xs = ys.map(x => (x - mean) / (std + 1e-9))
         val (cp, mapRun) = detect(xs, hazard)
-        rows.indices.iterator.map { i =>
-          Out(sid, rows(i)._2, ys(i), cp(i), mapRun(i))
+        ys.indices.iterator.map { i =>
+          Out(sid, tss(i), ys(i), cp(i), mapRun(i))
         }
       }
     }.toDF()

@@ -3,7 +3,6 @@ package graft.models
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** M3: Bayesian structural time series — local linear trend plus one or
   * more seasonal components, the capability of statsmodels
@@ -345,12 +344,7 @@ object Bsts {
           mle: Boolean): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val typed = df.select(col(series).cast("string"), col(ts), col(value))
-      .as[(String, Timestamp, Double)]
-    graft.core.Grouped.pinned[String, (String, Timestamp, Double)](
-        typed, col(typed.columns.head)).flatMapGroups { (sid, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val ys = rows.map(_._3)
+    graft.core.Grouped.series(df, series, ts, value) { (sid, tss, ys) =>
       val n = ys.length
       val trainEnd = (n * trainFrac).toInt
       if (trainEnd < 12) Iterator.empty
@@ -371,7 +365,7 @@ object Bsts {
         var t = 0
         while (t < trainEnd) {
           val sd = math.sqrt(oneVar(t))
-          out(t) = Out(sid, rows(t)._2, ys(t), oneMean(t),
+          out(t) = Out(sid, tss(t), ys(t), oneMean(t),
             oneMean(t) - 1.96 * sd, oneMean(t) + 1.96 * sd, "Train")
           t += 1
         }
@@ -379,7 +373,7 @@ object Bsts {
         while (t < n) {
           val j = t - trainEnd
           val sd = math.sqrt(fv(j))
-          out(t) = Out(sid, rows(t)._2, ys(t), fm(j), fm(j) - 1.96 * sd,
+          out(t) = Out(sid, tss(t), ys(t), fm(j), fm(j) - 1.96 * sd,
             fm(j) + 1.96 * sd, "Test")
           t += 1
         }

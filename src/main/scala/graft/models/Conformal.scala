@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   * flags — the honest answer, not a clamped artifact.
   *
   * Spark shape: one ordered window pass for the ordinal + per-series
-  * counts, one calibration-half aggregate (`sort_array(collect_list)`
-  * over the bounded per-series calibration residuals — exact k-th
-  * order statistic), broadcast-sized q̂ table joined back. Scale axis
+  * counts, one calibration-half aggregate (the sorted list of the
+  * bounded per-series calibration residuals, indexed for the exact
+  * k-th order statistic — no float fold, so it needs no
+  * `core.Folds` order), broadcast-sized q̂ table joined back. Scale axis
   * = series count, core-parallel like every per-series op here. */
 object Conformal {
 

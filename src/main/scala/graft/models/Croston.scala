@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Croston's method (Croston, Oper. Res. Q. 1972) — THE intermittent-
   * demand forecaster (spare parts, rare events, sparse purchase
   * series), where plain exponential smoothing is biased by the zero
@@ -53,9 +55,8 @@ object Croston {
     demands.groupBy("__sk")
       .agg(count(lit(1)).as("n_demands"),
         aggregate(
-          transform(array_sort(collect_list(struct(col("__i"),
-            struct(col("__d").as("d"), col("__q").as("q")).as("x")))),
-            s => s.getField("x")),
+          Folds.inOrder(col("__i"),
+            struct(col("__d").as("d"), col("__q").as("q"))),
           struct(lit(0.0).as("z"), lit(0.0).as("p"), lit(0L).as("k")),
           (acc, e) => struct(
             when(acc.getField("k") === 0, e.getField("d"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Folds
+
 /** Classical additive seasonal decomposition (the moving-average
   * method statsmodels ships as `seasonal_decompose` — Macaulay 1931
   * vintage) — the transparent baseline sibling of the STL tier (M1):
@@ -66,16 +68,10 @@ object Decompose {
       .withColumn("__phase", (col("__rn") - 1) % period)
     val sIdx = base.filter(col("__trend").isNotNull)
       .groupBy(col(series), col("__phase"))
-      .agg((aggregate(
-        sort_array(collect_list(struct(col("__rn"),
-          (col(value) - col("__trend")).as("d")))),
-        lit(0.0), (a, x) => a + x.getField("d")) /
+      .agg((Folds.orderedSum(col("__rn"), col(value) - col("__trend")) /
         count(lit(1)).cast("double")).as("__sidx"))
     val sMean = sIdx.groupBy(series)
-      .agg((aggregate(
-        sort_array(collect_list(struct(col("__phase"),
-          col("__sidx").as("v")))),
-        lit(0.0), (a, x) => a + x.getField("v")) /
+      .agg((Folds.orderedSum(col("__phase"), col("__sidx")) /
         count(lit(1)).cast("double")).as("__smean"))
     base.join(broadcast(sIdx), Seq(series, "__phase"))
       .join(broadcast(sMean), series)

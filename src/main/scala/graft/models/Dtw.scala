@@ -56,7 +56,6 @@ object Dtw {
     if (sd < 1e-12) y.map(_ - mu) else y.map(v => (v - mu) / sd)
   }
 
-  case class DtwRow(sk: String, ord: Long, value: Double)
   case class DtwOut(sk: String, template_id: String, dtw: Double)
 
   /** Banded z-normalized DTW of every corpus series against every
@@ -69,31 +68,18 @@ object Dtw {
     require(templateKeys.nonEmpty, "no template keys")
     val spark = df.sparkSession
     import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: one pinned exchange serves
-    // the window AND the column-keyed grouping (zero further exchanges)
-    val keyed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("__ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "__ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .select("sk", "ord", "value")
-    val tmplArrays: Map[String, Array[Double]] = keyed
-      .filter(col("sk").isin(templateKeys: _*))
-      .as[DtwRow].collect()
-      .groupBy(_.sk)
-      .map { case (k, rs) => k -> znorm(rs.sortBy(_.ord).map(_.value)) }
+    val tmplArrays: Map[String, Array[Double]] = graft.core.Grouped.series(
+        df.filter(col(series).cast("string").isin(templateKeys: _*)),
+        series, ts, value)((sk, _, y) => Iterator(sk -> znorm(y)))
+      .collect().toMap
     require(tmplArrays.nonEmpty, "template keys matched no series")
     val bc = spark.sparkContext.broadcast(tmplArrays)
-    graft.core.Grouped.keyed[String, DtwRow](keyed.as[DtwRow], col("sk"))
-      .flatMapGroups { (sk: String, it: Iterator[DtwRow]) =>
-        val y = znorm(it.toArray.sortBy(_.ord).map(_.value))
-        bc.value.toSeq.sortBy(_._1).iterator.map { case (tid, t) =>
-          DtwOut(sk, tid, dtwDistance(y, t, band))
-        }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, _, y0) =>
+      val y = znorm(y0)
+      bc.value.toSeq.sortBy(_._1).iterator.map { case (tid, t) =>
+        DtwOut(sk, tid, dtwDistance(y, t, band))
       }
-      .toDF("sk", "template_id", "dtw")
+    }.toDF("sk", "template_id", "dtw")
       .withColumnRenamed("sk", series)
   }
 }

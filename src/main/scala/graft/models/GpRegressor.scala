@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** M4: Gaussian-process regression with the reference's composite kernel
   * `C·RBF + C·ExpSineSquared(period) [+ C·ExpSineSquared(period2)] +
@@ -350,28 +349,24 @@ object GpRegressor {
     val candidates =
       for (l <- Seq(20.0, 50.0, 100.0); w <- Seq(0.01, 0.1, 0.5))
         yield mk(l, w)
-    val typed = df.select(col(series).cast("string"), col(ts), col(value))
-      .as[(String, Timestamp, Double)]
-    graft.core.Grouped.pinned[String, (String, Timestamp, Double)](
-        typed, col(typed.columns.head)).flatMapGroups { (sid, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val n = rows.length
+    graft.core.Grouped.series(df, series, ts, value) { (sid, tss, ys) =>
+      val n = ys.length
       val trainEnd = (n * trainFrac).toInt
       if (trainEnd < 8 || trainEnd >= n) Iterator.empty
       else {
         val s0 = math.max(0, trainEnd - subsample)
         val xTr = (s0 until trainEnd).map(_.toDouble).toArray
-        val yTr = rows.slice(s0, trainEnd).map(_._3)
+        val yTr = ys.slice(s0, trainEnd)
         val xTe = (trainEnd until n).map(_.toDouble).toArray
         val chosen =
           if (optimize) fitKernel(xTr, yTr, candidates, period, period2)
           else kernel
         val (mean, std) = predict(xTr, yTr, xTe, chosen)
-        rows.indices.iterator.map { i =>
+        ys.indices.iterator.map { i =>
           if (i < trainEnd)
-            Out(sid, rows(i)._2, rows(i)._3, rows(i)._3, 0.0, "Train")
+            Out(sid, tss(i), ys(i), ys(i), 0.0, "Train")
           else
-            Out(sid, rows(i)._2, rows(i)._3, mean(i - trainEnd),
+            Out(sid, tss(i), ys(i), mean(i - trainEnd),
               std(i - trainEnd), "Test")
         }
       }

@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Additive Holt–Winters (triple exponential smoothing, Winters 1960)
   * one-step-ahead forecaster — the classic cheap seasonal baseline a
@@ -25,8 +24,6 @@ import org.apache.spark.sql.functions._
   * oracle-safe, parallel across series (the M2-M6 scale shape). */
 object HoltWinters {
 
-  case class HwRow(sk: String, ord: Long, ts: java.sql.Timestamp,
-                   value: Double)
   case class HwOut(sk: String, ts: java.sql.Timestamp, value: Double,
                    hw_pred: Double, hw_resid: Double)
 
@@ -40,45 +37,28 @@ object HoltWinters {
       "smoothing parameters must be in (0,1)")
     val spark = df.sparkSession
     import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: the one pinned exchange
-    // serves the window AND the column-keyed grouping below (zero
-    // further exchanges), so the per-series fit keeps full parallelism
-    // however small the shuffle bytes are
-    val typed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .select(col("sk"), col("ord"), col("ts"), col("value"))
-      .as[HwRow]
-    graft.core.Grouped.keyed[String, HwRow](typed, col("sk"))
-      .flatMapGroups { (sk: String, it: Iterator[HwRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        val n = rows.length
-        val m = period
-        if (n < 2 * m) Iterator.empty
-        else {
-          val y = rows.map(_.value)
-          val mean1 = y.slice(0, m).sum / m
-          val mean2 = y.slice(m, 2 * m).sum / m
-          var l = mean1
-          var b = (mean2 - mean1) / m
-          val s = Array.tabulate(m)(i => y(i) - mean1)
-          rows.iterator.zipWithIndex.map { case (r, t) =>
-            val si = t % m
-            val pred = l + b + s(si)
-            val resid = r.value - pred
-            val lNew = alpha * (r.value - s(si)) + (1 - alpha) * (l + b)
-            b = beta * (lNew - l) + (1 - beta) * b
-            s(si) = gamma * (r.value - lNew) + (1 - gamma) * s(si)
-            l = lNew
-            HwOut(sk, r.ts, r.value, pred, resid)
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      val n = y.length
+      val m = period
+      if (n < 2 * m) Iterator.empty
+      else {
+        val mean1 = y.slice(0, m).sum / m
+        val mean2 = y.slice(m, 2 * m).sum / m
+        var l = mean1
+        var b = (mean2 - mean1) / m
+        val s = Array.tabulate(m)(i => y(i) - mean1)
+        y.indices.iterator.map { t =>
+          val si = t % m
+          val pred = l + b + s(si)
+          val resid = y(t) - pred
+          val lNew = alpha * (y(t) - s(si)) + (1 - alpha) * (l + b)
+          b = beta * (lNew - l) + (1 - beta) * b
+          s(si) = gamma * (y(t) - lNew) + (1 - gamma) * s(si)
+          l = lNew
+          HwOut(sk, tss(t), y(t), pred, resid)
         }
       }
-      .toDF("sk", "ts", "value", "hw_pred", "hw_resid")
+    }.toDF("sk", "ts", "value", "hw_pred", "hw_resid")
       .withColumnRenamed("sk", series)
   }
 }

@@ -2,8 +2,7 @@ package graft.models
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** M2: Kalman local-level model (reference `src/kalman_model.py:9-43`).
   *
@@ -87,12 +86,7 @@ object KalmanLocalLevel {
           trainFrac: Double = 0.5): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val typed = df.select(col(series).cast("string"), col(ts), col(value))
-      .as[(String, Timestamp, Double)]
-    graft.core.Grouped.pinned[String, (String, Timestamp, Double)](
-        typed, col(typed.columns.head)).flatMapGroups { (sid, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val ys = rows.map(_._3)
+    graft.core.Grouped.series(df, series, ts, value) { (sid, tss, ys) =>
       val n = ys.length
       val trainEnd = (n * trainFrac).toInt
       if (trainEnd < 8) Iterator.empty
@@ -108,7 +102,7 @@ object KalmanLocalLevel {
             if (i == 0) (ys(0), p + q + h)
             else (mu, p + q + h)
           if (i < trainEnd) {
-            out(i) = Out(sid, rows(i)._2, ys(i), pm, math.sqrt(pv),
+            out(i) = Out(sid, tss(i), ys(i), pm, math.sqrt(pv),
               ys(i) - pm, "Train")
             if (i > 0) { // standard update
               val pPred = p + q
@@ -121,7 +115,7 @@ object KalmanLocalLevel {
             // dynamic forecast: no updates past the train boundary
             val kAhead = i - trainEnd + 1
             val vDyn = p + kAhead * q + h
-            out(i) = Out(sid, rows(i)._2, ys(i), mu, math.sqrt(vDyn),
+            out(i) = Out(sid, tss(i), ys(i), mu, math.sqrt(vDyn),
               ys(i) - mu, "Test")
           }
           i += 1

@@ -1,8 +1,10 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.Folds
 
 /** Local Outlier Factor (Breunig et al., SIGMOD 2000) over per-series
   * (value, Δvalue) features — the density-based complement to the
@@ -42,10 +44,6 @@ import org.apache.spark.sql.functions._
   * omitted; series with n ≤ k use all n−1 available neighbors.
   */
 object Lof {
-
-  /** Neighbor-ordered float fold (the shared house convention). */
-  private def orderedSum(ord: Column, v: Column): Column =
-    graft.core.Folds.orderedSum(ord, v)
 
   /** (series, ordinal, value, Δvalue) feature frame shared by both
     * faces: __sk, __i, __x, __y. */
@@ -95,7 +93,7 @@ object Lof {
       .withColumn("__rd", greatest(col("__kdj"), col("__d")))
       .groupBy("__sk", "__ia")
       .agg((count(lit(1)).cast("double") /
-        greatest(orderedSum(col("__ib"), col("__rd")), lit(1e-12)))
+        greatest(Folds.orderedSum(col("__ib"), col("__rd")), lit(1e-12)))
         .as("__lrd"))
     val lrdJ = lrd.select(col("__sk"), col("__ia").as("__ib"),
       col("__lrd").as("__lrdj"))
@@ -103,7 +101,7 @@ object Lof {
       .join(lrd, Seq("__sk", "__ia"))
       .groupBy("__sk", "__ia")
       .agg(max("__xa").as("__xv"),
-        (orderedSum(col("__ib"), col("__lrdj")) /
+        (Folds.orderedSum(col("__ib"), col("__lrdj")) /
           count(lit(1)).cast("double") / max("__lrd")).as("__lof"))
       .select(col("__sk").as(series), col("__ia").as("ord"),
         col("__xv").as(value), col("__lof").as("lof"))

@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Matrix profile via STOMP (Yeh et al. ICDM 2016 "Matrix Profile I";
   * Zhu et al. ICDM 2016 "Matrix Profile II" for the O(n²) rolling-dot
@@ -29,8 +28,6 @@ import org.apache.spark.sql.functions._
   * portability and are out of scope). */
 object MatrixProfile {
 
-  case class MpRow(sk: String, ord: Long, ts: java.sql.Timestamp,
-                   value: Double)
   case class MpOut(sk: String, ts: java.sql.Timestamp, value: Double,
                    mp: Double, mp_index: Long)
 
@@ -163,28 +160,15 @@ object MatrixProfile {
     require(w >= 4, s"w=$w must be >= 4")
     val spark = df.sparkSession
     import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: one pinned exchange serves
-    // the window AND the column-keyed grouping (zero further exchanges)
-    val typed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .as[MpRow]
-    graft.core.Grouped.keyed[String, MpRow](typed, col("sk"))
-      .flatMapGroups { (sk: String, it: Iterator[MpRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        if (rows.length < 2 * w) Iterator.empty
-        else {
-          val prof = stomp(rows.map(_.value), w)
-          prof.iterator.zipWithIndex.map { case ((d, idx), k) =>
-            MpOut(sk, rows(k).ts, rows(k).value, d, idx.toLong)
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      if (y.length < 2 * w) Iterator.empty
+      else {
+        val prof = stomp(y, w)
+        prof.iterator.zipWithIndex.map { case ((d, idx), k) =>
+          MpOut(sk, tss(k), y(k), d, idx.toLong)
         }
       }
-      .toDF("sk", "ts", "value", "mp", "mp_index")
+    }.toDF("sk", "ts", "value", "mp", "mp_index")
       .withColumnRenamed("sk", series)
   }
 }

@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** PELT — Pruned Exact Linear Time changepoint detection (Killick,
   * Fearnhead & Eckley, JASA 2012). The OFFLINE exact complement to
@@ -27,8 +26,6 @@ import org.apache.spark.sql.functions._
   * this package. Returns one row per SEGMENT. */
 object Pelt {
 
-  case class PeltRow(sk: String, ord: Long, ts: java.sql.Timestamp,
-                     value: Double)
   case class SegOut(sk: String, seg_id: Long,
                     start_ts: java.sql.Timestamp,
                     end_ts: java.sql.Timestamp, n_points: Long,
@@ -91,42 +88,25 @@ object Pelt {
     require(betaFactor > 0, s"betaFactor=$betaFactor must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: the one pinned exchange
-    // serves the window AND the column-keyed grouping below (zero
-    // further exchanges), so the per-series fit keeps full parallelism
-    // however small the shuffle bytes are
-    val typed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .select(col("sk"), col("ord"), col("ts"), col("value"))
-      .as[PeltRow]
-    graft.core.Grouped.keyed[String, PeltRow](typed, col("sk"))
-      .flatMapGroups { (sk: String, it: Iterator[PeltRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        val n = rows.length
-        if (n == 0) Iterator.empty
-        else {
-          val y = rows.map(_.value)
-          val (mu, sd) = Spc.meanStd(y)
-          val z = y.map(v => (v - mu) / sd)
-          val beta = betaFactor * math.log(n.toDouble)
-          val ends = (if (n >= 4) segmentEnds(z, beta) else Nil) ::: List(n)
-          val starts = 0 :: ends.init
-          starts.zip(ends).zipWithIndex.iterator.map {
-            case ((a, b), segId) =>
-              var s = 0.0
-              var j = a
-              while (j < b) { s += y(j); j += 1 }
-              SegOut(sk, segId.toLong, rows(a).ts, rows(b - 1).ts,
-                (b - a).toLong, s / (b - a))
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      val n = y.length
+      if (n == 0) Iterator.empty
+      else {
+        val (mu, sd) = Spc.meanStd(y)
+        val z = y.map(v => (v - mu) / sd)
+        val beta = betaFactor * math.log(n.toDouble)
+        val ends = (if (n >= 4) segmentEnds(z, beta) else Nil) ::: List(n)
+        val starts = 0 :: ends.init
+        starts.zip(ends).zipWithIndex.iterator.map {
+          case ((a, b), segId) =>
+            var s = 0.0
+            var j = a
+            while (j < b) { s += y(j); j += 1 }
+            SegOut(sk, segId.toLong, tss(a), tss(b - 1),
+              (b - a).toLong, s / (b - a))
         }
       }
-      .toDF("sk", "seg_id", "start_ts", "end_ts", "n_points", "seg_mean")
+    }.toDF("sk", "seg_id", "start_ts", "end_ts", "n_points", "seg_mean")
       .withColumnRenamed("sk", series)
   }
 }

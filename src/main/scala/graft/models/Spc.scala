@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Classical statistical-process-control detectors — the two SPC
   * charts every monitoring suite carries next to the model-based
@@ -29,32 +28,10 @@ import org.apache.spark.sql.functions._
   */
 object Spc {
 
-  case class SpcRow(sk: String, ord: Long, ts: java.sql.Timestamp,
-                    value: Double)
   case class EwmaOut(sk: String, ts: java.sql.Timestamp, value: Double,
                      ewma: Double, limit: Double, is_anomaly: Int)
   case class CusumOut(sk: String, ts: java.sql.Timestamp, value: Double,
                       cusum_hi: Double, cusum_lo: Double, is_anomaly: Int)
-
-  private def keyed(df: DataFrame, series: String, ts: String,
-                    value: String) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: the one pinned exchange
-    // serves the window AND the column-keyed grouping below (zero
-    // further exchanges), so the per-series fit keeps full parallelism
-    // however small the shuffle bytes are
-    val typed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .select(col("sk"), col("ord"), col("ts"), col("value"))
-      .as[SpcRow]
-    graft.core.Grouped.keyed[String, SpcRow](typed, col("sk"))
-  }
 
   /** In-order Welford mean/std (ddof=1); σ̂ floored at 1e-12 so a
     * constant series standardizes to 0 rather than NaN (P7 eps
@@ -90,27 +67,22 @@ object Spc {
       s"baselineN=$baselineN must be 0 (whole series) or >= 2")
     val spark = df.sparkSession
     import spark.implicits._
-    keyed(df, series, ts, value)
-      .flatMapGroups { (sk: String, it: Iterator[SpcRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        if (rows.length < math.max(2, baselineN)) Iterator.empty
-        else {
-          val statsOver =
-            if (baselineN > 0) rows.take(baselineN) else rows
-          val (mu, sd) = meanStd(statsOver.map(_.value))
-          val base = sd * math.sqrt(lambda / (2.0 - lambda))
-          var z = mu
-          var decay = 1.0 // (1-λ)^(2t), updated before each emit
-          rows.iterator.map { r =>
-            z = lambda * r.value + (1.0 - lambda) * z
-            decay *= (1.0 - lambda) * (1.0 - lambda)
-            val limit = l * base * math.sqrt(1.0 - decay)
-            val flag = if (math.abs(z - mu) > limit) 1 else 0
-            EwmaOut(sk, r.ts, r.value, z, limit, flag)
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      if (y.length < math.max(2, baselineN)) Iterator.empty
+      else {
+        val (mu, sd) = meanStd(if (baselineN > 0) y.take(baselineN) else y)
+        val base = sd * math.sqrt(lambda / (2.0 - lambda))
+        var z = mu
+        var decay = 1.0 // (1-λ)^(2t), updated before each emit
+        y.indices.iterator.map { t =>
+          z = lambda * y(t) + (1.0 - lambda) * z
+          decay *= (1.0 - lambda) * (1.0 - lambda)
+          val limit = l * base * math.sqrt(1.0 - decay)
+          val flag = if (math.abs(z - mu) > limit) 1 else 0
+          EwmaOut(sk, tss(t), y(t), z, limit, flag)
         }
       }
-      .toDF("sk", "ts", "value", "ewma", "limit", "is_anomaly")
+    }.toDF("sk", "ts", "value", "ewma", "limit", "is_anomaly")
       .withColumnRenamed("sk", series)
   }
 
@@ -127,26 +99,21 @@ object Spc {
       s"baselineN=$baselineN must be 0 (whole series) or >= 2")
     val spark = df.sparkSession
     import spark.implicits._
-    keyed(df, series, ts, value)
-      .flatMapGroups { (sk: String, it: Iterator[SpcRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        if (rows.length < math.max(2, baselineN)) Iterator.empty
-        else {
-          val statsOver =
-            if (baselineN > 0) rows.take(baselineN) else rows
-          val (mu, sd) = meanStd(statsOver.map(_.value))
-          var sp = 0.0
-          var sn = 0.0
-          rows.iterator.map { r =>
-            val z = (r.value - mu) / sd
-            sp = math.max(0.0, sp + z - k)
-            sn = math.max(0.0, sn - z - k)
-            val flag = if (sp > h || sn > h) 1 else 0
-            CusumOut(sk, r.ts, r.value, sp, sn, flag)
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      if (y.length < math.max(2, baselineN)) Iterator.empty
+      else {
+        val (mu, sd) = meanStd(if (baselineN > 0) y.take(baselineN) else y)
+        var sp = 0.0
+        var sn = 0.0
+        y.indices.iterator.map { t =>
+          val z = (y(t) - mu) / sd
+          sp = math.max(0.0, sp + z - k)
+          sn = math.max(0.0, sn - z - k)
+          val flag = if (sp > h || sn > h) 1 else 0
+          CusumOut(sk, tss(t), y(t), sp, sn, flag)
         }
       }
-      .toDF("sk", "ts", "value", "cusum_hi", "cusum_lo", "is_anomaly")
+    }.toDF("sk", "ts", "value", "cusum_hi", "cusum_lo", "is_anomaly")
       .withColumnRenamed("sk", series)
   }
 }

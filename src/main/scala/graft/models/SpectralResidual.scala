@@ -1,7 +1,6 @@
 package graft.models
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Spectral Residual saliency detection (Hou & Zhang CVPR 2007,
   * applied to time series as the SR stage of Ren et al., KDD 2019 —
@@ -22,8 +21,6 @@ import org.apache.spark.sql.functions._
   * in `mapGroups`; scale axis = series count, core-parallel. */
 object SpectralResidual {
 
-  case class SrRow(sk: String, ord: Long, ts: java.sql.Timestamp,
-                   value: Double)
   case class SrOut(sk: String, ts: java.sql.Timestamp, value: Double,
                    saliency: Double, sr_score: Double, is_anomaly: Int)
 
@@ -89,38 +86,22 @@ object SpectralResidual {
     require(q >= 1 && z >= 1, "q and z must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    // Grouped.pin BEFORE the ordinal window: the one pinned exchange
-    // serves the window AND the column-keyed grouping below (zero
-    // further exchanges), so the per-series fit keeps full parallelism
-    // however small the shuffle bytes are
-    val typed = graft.core.SeriesOps.withRowNumber(
-        graft.core.Grouped.pin(
-          df.select(col(series).cast("string").as("sk"),
-            col(ts).cast("timestamp").as("ts"),
-            col(value).cast("double").as("value")), Seq("sk")),
-        "sk", "ts", "ord")
-      .withColumn("ord", col("ord").cast("long"))
-      .select(col("sk"), col("ord"), col("ts"), col("value"))
-      .as[SrRow]
-    graft.core.Grouped.keyed[String, SrRow](typed, col("sk"))
-      .flatMapGroups { (sk: String, it: Iterator[SrRow]) =>
-        val rows = it.toArray.sortBy(_.ord)
-        val n = rows.length
-        if (n < math.max(q, 4)) Iterator.empty
-        else {
-          val sal = saliency(rows.map(_.value), q)
-          rows.iterator.zipWithIndex.map { case (r, i) =>
-            val a = math.max(0, i - z + 1)
-            var s = 0.0; var j = a
-            while (j <= i) { s += sal(j); j += 1 }
-            val local = math.max(s / (i - a + 1), 1e-12)
-            val score = (sal(i) - local) / local
-            SrOut(sk, r.ts, r.value, sal(i), score,
-              if (score > threshold) 1 else 0)
-          }
+    graft.core.Grouped.series(df, series, ts, value) { (sk, tss, y) =>
+      val n = y.length
+      if (n < math.max(q, 4)) Iterator.empty
+      else {
+        val sal = saliency(y, q)
+        y.indices.iterator.map { i =>
+          val a = math.max(0, i - z + 1)
+          var s = 0.0; var j = a
+          while (j <= i) { s += sal(j); j += 1 }
+          val local = math.max(s / (i - a + 1), 1e-12)
+          val score = (sal(i) - local) / local
+          SrOut(sk, tss(i), y(i), sal(i), score,
+            if (score > threshold) 1 else 0)
         }
       }
-      .toDF("sk", "ts", "value", "saliency", "sr_score", "is_anomaly")
+    }.toDF("sk", "ts", "value", "saliency", "sr_score", "is_anomaly")
       .withColumnRenamed("sk", series)
   }
 }

@@ -3,7 +3,6 @@ package graft.models
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** M1 exact mode: per-series STL (Cleveland et al. 1990) — the reference
   * uses statsmodels `STL(series, period, robust=True)`
@@ -253,19 +252,14 @@ object StlExact {
                 period: Int, robust: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val typed = df.select(col(series).cast("string"), col(ts), col(value))
-      .as[(String, Timestamp, Double)]
-    graft.core.Grouped.pinned[String, (String, Timestamp, Double)](
-        typed, col(typed.columns.head)).flatMapGroups { (sid, it) =>
-      val rows = it.toArray.sortBy(_._2.getTime)
-      val ys = rows.map(_._3)
+    graft.core.Grouped.series(df, series, ts, value) { (sid, tss, ys) =>
       if (ys.length < 2 * period) Iterator.empty
       else {
         val (trend, seasonal) =
           if (robust) stl(ys, period)
           else stl(ys, period, innerIters = 5, outerIters = 0)
-        rows.indices.iterator.map { i =>
-          Out(sid, rows(i)._2, ys(i), trend(i), seasonal(i),
+        ys.indices.iterator.map { i =>
+          Out(sid, tss(i), ys(i), trend(i), seasonal(i),
             ys(i) - trend(i) - seasonal(i))
         }
       }

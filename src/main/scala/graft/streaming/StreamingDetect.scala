@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.Grouped
+
 /** Structured Streaming variants of the detector DAG (SURVEY §2.10 —
   * additive capability; the reference is batch-only but BOCPD/Kalman are
   * algorithmically online).
@@ -266,6 +268,14 @@ object StreamingDetect {
   // ---- M2 streaming: Kalman local level with explicit state ----------
 
   case class Point(series_id: String, ts: Timestamp, value: Double)
+
+  /** A micro-batch of one series in [[Grouped.pointOrder]], the order the
+    * batch kernels fit in: full-precision `ts` (`getTime` would drop the
+    * microseconds, so two points 1 µs apart could fold backwards), then
+    * `value`. */
+  private def inOrder(it: Iterator[Point]): Seq[Point] =
+    it.toSeq.sortBy(p => (p.ts, p.value))(Grouped.pointOrder)
+
   case class KalmanState(level: Double, p: Double, initialized: Boolean)
   case class KalmanOut(series_id: String, ts: Timestamp, value: Double,
                        pred_mean: Double, pred_std: Double, resid: Double)
@@ -281,7 +291,7 @@ object StreamingDetect {
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (sid: String, it: Iterator[Point], state: GroupState[KalmanState]) =>
           var s = state.getOption.getOrElse(KalmanState(0.0, 1e7, false))
-          val out = it.toSeq.sortBy(_.ts.getTime).map { pt =>
+          val out = inOrder(it).map { pt =>
             val (pm, pv, ns) =
               if (!s.initialized)
                 (pt.value, s.p + q + h,
@@ -327,7 +337,7 @@ object StreamingDetect {
       .flatMapGroupsWithState[BstsState, BstsOut](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (sid: String, it: Iterator[Point], state: GroupState[BstsState]) =>
-          val pts = it.toSeq.sortBy(_.ts.getTime)
+          val pts = inOrder(it)
           if (pts.isEmpty) Iterator.empty
           else {
             val s = state.getOption.getOrElse {
@@ -380,7 +390,7 @@ object StreamingDetect {
           var s = state.getOption.getOrElse(
             BocpdState(Array(1.0), Array(0.0), Array(1.0), Array(1.0),
               Array(1.0)))
-          val out = it.toSeq.sortBy(_.ts.getTime).map { pt =>
+          val out = inOrder(it).map { pt =>
             val (ns, cp, mapRun) = graft.models.Bocpd.step(
               s.r, s.mu, s.kappa, s.alpha, s.beta, pt.value, hazard)
             s = BocpdState(ns._1, ns._2, ns._3, ns._4, ns._5)
@@ -435,9 +445,7 @@ object StreamingDetect {
               t = st.t + 1)
             out += HwStreamOut(sid, ts, v, pred, v - pred)
           }
-          // full-precision Timestamp ordering (getTime would collapse
-          // sub-millisecond order)
-          it.toSeq.sortWith((a, b) => a.ts.compareTo(b.ts) < 0)
+          inOrder(it)
             .foreach { pt =>
             if (st.ready) stepOne(pt.ts, pt.value)
             else {
@@ -499,7 +507,7 @@ object StreamingDetect {
             CrostonStreamState(0L, 0L, 0L, 0.0, 0.0))
           val out = scala.collection.mutable.ArrayBuffer
             .empty[CrostonStreamOut]
-          it.toSeq.sortWith((x, y) => x.ts.compareTo(y.ts) < 0)
+          inOrder(it)
             .foreach { pt =>
               val i = st.t + 1
               st = st.copy(t = i)
@@ -564,7 +572,7 @@ object StreamingDetect {
             out += EwmaStreamOut(sid, ts, v, z, limit,
               if (math.abs(z - st.mu) > limit) 1 else 0)
           }
-          it.toSeq.sortWith((x, y) => x.ts.compareTo(y.ts) < 0)
+          inOrder(it)
             .foreach { pt =>
               if (st.ready) stepOne(pt.ts, pt.value)
               else {
@@ -616,7 +624,7 @@ object StreamingDetect {
          state: GroupState[FunnelState]) =>
           var st = state.getOption.getOrElse(FunnelState(Vector.empty, 0L))
           val out = scala.collection.mutable.ArrayBuffer.empty[FunnelOut]
-          it.toSeq.sortWith((a, b) => a.ts.compareTo(b.ts) < 0)
+          it.toSeq.sortBy(_.ts)(Grouped.tsOrder)
             .foreach { e =>
               if (st.matched.isEmpty) {
                 if (e.event_type == steps.head) {
@@ -671,7 +679,7 @@ object StreamingDetect {
             t.getTime * 1000L + (t.getNanos % 1000000) / 1000
           val out = scala.collection.mutable.ArrayBuffer
             .empty[SessionAssign]
-          it.toSeq.sortWith((a, b) => a.ts.compareTo(b.ts) < 0)
+          it.toSeq.sortBy(_.ts)(Grouped.tsOrder)
             .foreach { e =>
               val m = micros(e.ts)
               if (st.seq == 0L || m - st.lastMicros > gapMicros)
@@ -712,7 +720,7 @@ object StreamingDetect {
             out += CusumStreamOut(sid, ts, v, sp, sn,
               if (sp > h || sn > h) 1 else 0)
           }
-          it.toSeq.sortWith((x, y) => x.ts.compareTo(y.ts) < 0)
+          inOrder(it)
             .foreach { pt =>
               if (st.ready) stepOne(pt.ts, pt.value)
               else {
@@ -755,7 +763,7 @@ object StreamingDetect {
           var st = state.getOption.getOrElse(DeltaState(0.0, false))
           val out = scala.collection.mutable.ArrayBuffer
             .empty[DeltaOut]
-          it.toSeq.sortWith((a, b) => a.ts.compareTo(b.ts) < 0)
+          inOrder(it)
             .foreach { p =>
               val d = if (st.has) p.value - st.last else 0.0
               out += DeltaOut(sid, p.ts, p.value, d)
@@ -864,7 +872,8 @@ object StreamingDetect {
             else (Some(fromMicros(buf.ts(i))), Some(buf.v(i)))
           }
           it.toSeq
-            .sortBy(e => (micros(e.ts), e.side))
+            .sortBy(e => (e.ts, e.side))(
+              Ordering.Tuple2(Grouped.tsOrder, Ordering.Int))
             .foreach { e =>
               val tsM = micros(e.ts)
               if (e.side == 0) insertRight(tsM, e.value)

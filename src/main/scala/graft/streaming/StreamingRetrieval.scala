@@ -122,7 +122,7 @@ object StreamingRetrieval {
           val scored = it.toSeq.distinct.groupBy(_.doc_id).map {
             case (doc, hs) =>
               // per-doc fold in term order = the batch
-              // sort_array(collect_list(struct(term, contrib))) fold;
+              // Folds.orderedSum(term, contrib);
               // terms are unique per doc after the dedup, and the sort
               // compares UTF-8 bytes to match Spark's binary string
               // ordering (Scala's UTF-16 order diverges past the BMP)

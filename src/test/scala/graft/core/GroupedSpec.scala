@@ -9,7 +9,8 @@ import graft.SparkSpec
   * in groups and group contents, while its one exchange is the
   * explicit REPARTITION_BY_NUM form AQE never coalesces, sized to the
   * stock shuffle parallelism. These are the invariants every pinned
-  * model fit (StlExact, Bsts, GP, S-H-ESD, SPC, ...) relies on. */
+  * model fit (StlExact, Bsts, GP, S-H-ESD, SPC, ...) relies on; the
+  * per-series entry adds the one order each series is folded in. */
 class GroupedSpec extends SparkSpec {
 
   private def sample = {
@@ -58,13 +59,25 @@ class GroupedSpec extends SparkSpec {
     assert("Exchange".r.findAllIn(plan).size == 1)
   }
 
-  test("keyed grouping adds no exchange over a pinned input") {
+  test("series: one exchange, no window, full ts order") {
     import spark.implicits._
-    val plan = Grouped
-      .keyed[String, (String, Long, Double)](
-        Grouped.pin(sample, Seq("sk")), col("sk"))
-      .mapGroups((k, it) => (k, it.size))
-      .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(plan).size == 1)
+    val t = Seq("2024-01-01 00:00:00", "2024-01-01 00:00:00.000001",
+      "2024-01-01 00:00:00.000002").map(java.sql.Timestamp.valueOf)
+    // out of order on purpose: a NULL ts, a µs tie-break inside one
+    // millisecond, and a duplicate ts that only the value orders
+    val df = Seq(("a", t(2), 3.0), ("a", t(1), 2.0), ("a", null, 9.0),
+        ("b", t(0), 5.0), ("a", t(0), 1.0), ("a", t(1), 1.5))
+      .toDF("sk", "ts", "v")
+    val fits = Grouped.series(df, "sk", "ts", "v") { (sk, ts, v) =>
+      Iterator((sk, ts.map(String.valueOf).mkString(","), v.mkString(",")))
+    }
+    val plan = fits.queryExecution.executedPlan.toString
+    assert(plan.contains("REPARTITION_BY_NUM"))
+    assert("Exchange".r.findAllIn(plan).size == 1, plan)
+    assert(!plan.contains("Window"), plan)
+    val got = fits.collect().sortBy(_._1).toSeq
+    assert(got == Seq(
+      ("a", s"null,${t(0)},${t(1)},${t(1)},${t(2)}", "9.0,1.0,1.5,2.0,3.0"),
+      ("b", s"${t(0)}", "5.0")))
   }
 }

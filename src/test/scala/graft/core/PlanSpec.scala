@@ -35,7 +35,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("standardScale broadcasts the per-series stats") {
-    val p = plan(SeriesOps.standardScale(series(100), "series_id",
+    val p = plan(SeriesOps.standardScale(series(100), "series_id", "ts",
       "value", "z"))
     assert(p.contains("BroadcastHashJoin"), "stats join must broadcast")
     assert(!p.contains("SortMergeJoin"), "tiny stats side must not SMJ")

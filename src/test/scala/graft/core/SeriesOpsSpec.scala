@@ -102,12 +102,12 @@ class SeriesOpsSpec extends SparkSpec {
   test("standardScale pop vs samp ddof convention") {
     val vals = Seq(2.0, 4.0, 6.0)
     val pop = SeriesOps.standardScale(valueSeries(vals), "series_id",
-      "value", "zs", popStd = true).orderBy("ts")
+      "ts", "value", "zs", popStd = true).orderBy("ts")
       .select("zs").collect().map(_.getDouble(0))
     // pop std of (2,4,6) = sqrt(8/3); z of 6 = 2/sqrt(8/3)
     assert(math.abs(pop(2) - 2.0 / (math.sqrt(8.0 / 3) + 1e-9)) < 1e-12)
     val samp = SeriesOps.standardScale(valueSeries(vals), "series_id",
-      "value", "zs", popStd = false).orderBy("ts")
+      "ts", "value", "zs", popStd = false).orderBy("ts")
       .select("zs").collect().map(_.getDouble(0))
     assert(math.abs(samp(2) - 2.0 / (2.0 + 1e-9)) < 1e-12)
   }

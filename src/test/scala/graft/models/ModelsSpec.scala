@@ -29,6 +29,29 @@ class ModelsSpec extends SparkSpec {
     assert(testStd.sliding(2).forall(p => p(1) >= p(0) - 1e-9))
   }
 
+  test("Kalman orders a series at microsecond precision") {
+    import spark.implicits._
+    val ys = (0 until 40).map(i => math.sin(i / 3.0) + i * 0.1)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def at(i: Int, unitMicros: Long) = {
+      val us = i * unitMicros
+      val t = new java.sql.Timestamp(t0 + us / 1000000 * 1000)
+      t.setNanos((us % 1000000 * 1000).toInt)
+      t
+    }
+    def preds(unitMicros: Long, rows: Seq[Int]) =
+      KalmanLocalLevel.run(
+        rows.map(i => ("s", at(i, unitMicros), ys(i)))
+          .toDF("series_id", "ts", "value"),
+        "series_id", "ts", "value", 0.5)
+        .orderBy("ts").collect().map(_.getAs[Double]("pred_mean")).toSeq
+    // 1 µs apart, fed newest first: every point shares one millisecond
+    val micro = preds(1L, ys.indices.reverse)
+    val seconds = preds(1000000L, ys.indices)
+    assert(micro.length == ys.length)
+    assert(micro == seconds)
+  }
+
   test("Kalman MLE recovers noise-dominated vs signal-dominated regimes") {
     // pure noise around constant: q should be tiny vs h
     val flat = (0 until 300).map(_ => 5.0 + rng.nextGaussian()).toArray

@@ -133,6 +133,28 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("statefulKalman orders a micro-batch at microsecond precision") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
+    val t1 = Timestamp.valueOf("2024-01-01 00:00:00.000001")
+    val input = MemoryStream[Point]
+    val out = statefulKalman(input.toDS(), q = 0.1, h = 1.0)
+    val q = out.writeStream.format("memory").queryName("kal_us")
+      .outputMode("append").start()
+    try {
+      // one micro-batch, the later point first: both share a
+      // millisecond, so only the full timestamp puts t0 first
+      input.addData(Point("s", t1, 2.0), Point("s", t0, 1.0))
+      q.processAllAvailable()
+      val rows = spark.sql("select * from kal_us order by ts").collect()
+      assert(rows.map(_.getAs[Timestamp]("ts")).toSeq == Seq(t0, t1))
+      // initialized on t0: its prediction is its own value, and the
+      // level t1 is predicted from is still 1.0
+      assert(rows.map(_.getAs[Double]("pred_mean")).toSeq == Seq(1.0, 1.0))
+    } finally q.stop()
+  }
+
   test("statefulBsts filter is invariant to micro-batch splits") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
