@@ -29,6 +29,21 @@ import org.apache.spark.sql.SparkSession
   * Together they cut `nab_fleet`'s timed pass from 11.4 to 7.0 s and
   * its compiles from 616 to 3 (BENCH_NOTES, "Codegen cache"); either
   * alone gains less.
+  *
+  * Tungsten pages are 1 MiB (`spark.buffer.pageSize`). Spark sizes them
+  * from heap and cores, which gives 32 MiB at a 3 GB heap on 4 cores.
+  * Every sort, hash aggregate and string-keyed broadcast relation takes
+  * at least one page, however few rows it holds. At 32 MiB each page
+  * is a G1 humongous object of 17 regions. A `nab_fleet` pass allocated
+  * about 790 humongous regions next to about 1240 eden regions. Its one
+  * young collection then found almost no free region to copy survivors
+  * into: 0 to 6 regions to spare over 8 runs. Now and then it ran out
+  * ("To-space exhausted"), kept whole eden regions as old, and left
+  * about 1 GB after the collection instead of about 430 MB. With 1 MiB
+  * pages the same pass keeps about 270 MB free at that collection, and
+  * the heap after it is about 180 MB (BENCH_NOTES, "Page size"). A task
+  * can hold 8192 pages at once, which is 8 GiB at this size: more than
+  * the default 8 GB heap can give one task.
   */
 object EngineTuning {
 
@@ -54,7 +69,9 @@ object EngineTuning {
     // the codegen cache above the engine's working set (see the scaladoc)
     "spark.sql.codegen.cache.maxEntries" -> "1024",
     // a stage AQE renumbers reuses its class (see the scaladoc)
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    // Tungsten pages of 1 MiB, not 32 (see the scaladoc)
+    "spark.buffer.pageSize" -> "1m")
 
   /** Apply the tuning confs to a builder (chainable). */
   def apply(b: SparkSession.Builder): SparkSession.Builder =

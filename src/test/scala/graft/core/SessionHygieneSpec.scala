@@ -58,6 +58,8 @@ class SessionHygieneSpec extends AnyFunSuite {
       assert(conf.getOption(k).contains(v), s"session lost $k=$v")
     }
     assert(Session.base(2)("spark.master") == "local[2]")
+    // a static conf: only the running memory manager shows it took hold
+    assert(org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes == (1L << 20))
   }
 
   test("Session(2) resolves every native function with no registration call") {
